@@ -1175,73 +1175,132 @@ def _record_commit(spark: SparkSession, view_name: str, gen: int,
     generation must not be AS-OF-resolvable); rows of vacuumed
     generations are pruned on the vacuum cadence.
 
-    Since r11 every publish stamps (default engine clock), this runs
-    on EVERY swap — so after the first commit creates the table, the
-    append is one driver-side pyarrow part-file + a relation-cache
-    refresh (~30 ms) instead of a full Spark write job (~600 ms
-    measured — half the cost of a small swap).  The wall-time stamp
-    is parsed in the SESSION time zone and written UTC-adjusted,
-    exactly Spark's own parquet timestamp semantics, so rows from
-    both paths read back identically; any parse/scheme surprise
-    falls back to the Spark writer."""
+    Since r11 every publish stamps (default engine clock), so this runs
+    on EVERY swap.  The table CREATE is catalog-metadata-only DDL, and
+    the row goes through :func:`_write_timeline`: on a local warehouse
+    one driver-side pyarrow part file + a relation-cache refresh
+    (~30 ms) instead of a Spark write job (~600 ms measured — half the
+    cost of a small swap).  The wall-time stamp is parsed in the
+    SESSION time zone and written UTC-adjusted, exactly Spark's own
+    parquet timestamp semantics, so rows from both writers read back
+    identically."""
     ct = f"{view_name}__commits"
-    try:
-        if not spark.catalog.tableExists(ct):
-            # FIRST commit (r12, VERDICT r11 task 2): the table
-            # CREATE is catalog-metadata-only DDL — no Spark write
-            # job — and the row itself goes through the same pyarrow
-            # fast path as every later append.  The previous shape
-            # (a full Spark write to create table+row, ~600 ms) was
-            # the judge-bisected ~1.4x fixed overhead every state's
-            # first publish paid.
-            spark.sql(f"CREATE TABLE {ct} "
-                      f"(generation BIGINT, committed_at TIMESTAMP) "
-                      f"USING parquet")
-        _append_commit_row_fast(spark, ct, gen, committed_at)
+    spark.sql(f"CREATE TABLE IF NOT EXISTS {ct} "
+              f"(generation BIGINT, committed_at TIMESTAMP) USING parquet")
+    _write_timeline(spark, ct, append=(gen, committed_at))
+
+
+def _write_timeline(spark: SparkSession, ct: str,
+                    append: tuple[int, str] | None = None,
+                    drop: Sequence[int] = ()) -> None:
+    """The commit timeline's one writer: append one (generation,
+    committed_at string) row, or else prune the rows of ``drop``.  The
+    timeline's storage format is decided here and nowhere else.
+
+    On a local (``file:``) location neither starts a Spark job.  An
+    append writes one ``part-ldfcommit-*`` parquet file.  A prune
+    compacts: it lists the table's part files, reads exactly those,
+    writes the kept rows as ONE new part file and only then deletes
+    the listed files and their ``.crc`` sidecars — no instant exists
+    where a kept row is missing, and rows appended after the listing
+    are untouched.  Part files appear by atomic rename of a hidden
+    temp file, so a concurrent scan never meets a half-written one.
+
+    Any other scheme, or a stamp the driver cannot parse the way Spark
+    would (a session zone zoneinfo rejects, an unusual stamp format),
+    goes through the Spark writer instead."""
+    import os as _os
+
+    import pyarrow as _pa
+    import pyarrow.compute as _pc
+    import pyarrow.parquet as _pq
+
+    from legate_dataframe_spark.core import manifest as _mf
+
+    loc = _mf.table_location(spark, ct)
+    local = _mf._scheme_of(loc) in (None, "file")
+    if local and append is not None:
+        try:
+            stamp = _utc_instant(spark, append[1])
+        except Exception:
+            local = False
+    if not local:
+        _write_timeline_spark(spark, ct, append, drop)
         return
-    except Exception:
-        pass  # non-local location / exotic TZ → Spark writer
-    (spark.createDataFrame(
-        [(gen, committed_at)], "generation long, committed_at string")
-     .select("generation",
-             F.col("committed_at").cast("timestamp").alias("committed_at"))
-     .write.format("parquet").mode("append")
-     .saveAsTable(ct))
+    # Spark's writer stores the stamp as INT96 (pyarrow reads it
+    # zone-less, but the value is the UTC instant) or UTC-adjusted
+    # micros, this writer as UTC micros: all cast to the same instant
+    schema = _pa.schema([("generation", _pa.int64()),
+                         ("committed_at", _pa.timestamp("us", tz="UTC"))])
+    if append is not None:
+        _put_timeline_part(loc, _pa.table(
+            {"generation": [append[0]], "committed_at": [stamp]},
+            schema=schema))
+    else:
+        names = sorted(f for f in _os.listdir(loc)
+                       if f.endswith(".parquet")
+                       and not f.startswith((".", "_")))
+        tab = _pa.concat_tables(
+            [_pq.read_table(_os.path.join(loc, f),
+                            columns=schema.names,
+                            coerce_int96_timestamp_unit="us").cast(schema)
+             for f in names] or [schema.empty_table()])
+        gone = _pc.is_in(tab["generation"],
+                         value_set=_pa.array(sorted(drop), _pa.int64()))
+        _put_timeline_part(loc, tab.filter(_pc.invert(gone)))
+        for f in names:
+            _os.remove(_os.path.join(loc, f))
+            crc = _os.path.join(loc, f".{f}.crc")
+            if _os.path.exists(crc):
+                _os.remove(crc)
+    spark.catalog.refreshTable(ct)
 
 
-def _append_commit_row_fast(spark: SparkSession, ct: str, gen: int,
-                            committed_at: str) -> None:
+def _write_timeline_spark(spark: SparkSession, ct: str,
+                          append: tuple[int, str] | None,
+                          drop: Sequence[int]) -> None:
+    """:func:`_write_timeline` through Spark, for warehouses the driver
+    cannot write directly.  The append is one INSERT (the stamp cast
+    in the session zone); the prune checkpoints the kept rows first,
+    because Spark refuses to overwrite a table its own plan reads."""
+    if append is not None:
+        spark.sql(f"INSERT INTO {ct} SELECT CAST(:g AS BIGINT), "
+                  f"CAST(:ts AS TIMESTAMP)",
+                  args={"g": append[0], "ts": append[1]})
+        return
+    kept = (spark.table(ct)
+            .filter(~F.col("generation").isin(sorted(drop)))
+            .localCheckpoint())
+    kept.write.format("parquet").mode("overwrite").saveAsTable(ct)
+
+
+def _utc_instant(spark: SparkSession, committed_at: str):
+    """The session-zone wall-clock stamp as an aware UTC datetime.
+    Converted BEFORE pyarrow sees it: ``pa.array`` reads an aware
+    datetime's WALL-CLOCK fields as the target zone's value and
+    ignores its tzinfo (verified r12), so the instant must be
+    materialized as UTC wall-clock explicitly."""
     import datetime as _dt
+
+    fmt = ("%Y-%m-%d %H:%M:%S.%f" if "." in committed_at
+           else "%Y-%m-%d %H:%M:%S")
+    return (_dt.datetime.strptime(committed_at, fmt)
+            .replace(tzinfo=_session_tz(spark))
+            .astimezone(_dt.timezone.utc))
+
+
+def _put_timeline_part(loc: str, tab) -> None:
+    """Publish ``tab`` as one ``part-ldfcommit-*`` file in ``loc``:
+    written under a hidden name Spark's listing skips, then renamed."""
     import os as _os
     import uuid as _uuid
 
-    import pyarrow as _pa
     import pyarrow.parquet as _pq
 
-    from legate_dataframe_spark.core.manifest import (
-        _scheme_of,
-        table_location,
-    )
-
-    loc = table_location(spark, ct)
-    if _scheme_of(loc) not in (None, "file"):
-        raise ValueError("fast commit append is local-FS only")
-    fmt = ("%Y-%m-%d %H:%M:%S.%f" if "." in committed_at
-           else "%Y-%m-%d %H:%M:%S")
-    # convert to UTC BEFORE handing to pyarrow: pa.array reads an
-    # aware datetime's WALL-CLOCK fields as the target zone's value
-    # and ignores its tzinfo (verified r12), so the session-zone
-    # instant must be materialized as UTC wall-clock explicitly
-    dt = (_dt.datetime.strptime(committed_at, fmt)
-          .replace(tzinfo=_session_tz(spark))
-          .astimezone(_dt.timezone.utc))
-    tab = _pa.table({
-        "generation": _pa.array([gen], _pa.int64()),
-        "committed_at": _pa.array([dt], _pa.timestamp("us", tz="UTC")),
-    })
-    _pq.write_table(tab, _os.path.join(
-        loc, f"part-ldfcommit-{_uuid.uuid4().hex}.parquet"))
-    spark.catalog.refreshTable(ct)
+    name = f"part-ldfcommit-{_uuid.uuid4().hex}.parquet"
+    tmp = _os.path.join(loc, f".{name}.tmp")
+    _pq.write_table(tab, tmp)
+    _os.replace(tmp, _os.path.join(loc, name))
 
 
 def read_asof(spark: SparkSession, view_name: str, ts: str) -> DataFrame:
@@ -1373,7 +1432,13 @@ def vacuum_generations(spark: SparkSession, view_name: str,
     time policy must not guess times).  Requires a stamped timeline
     (``committed_at=`` on the writes).  Crash orphans are reclaimed
     regardless — they are junk above the view pointer, not retained
-    history."""
+    history.
+
+    The commit timeline loses the dropped generations' rows in the
+    same call.  On a local warehouse that prune is a driver-side
+    compaction (:func:`_write_timeline`: the kept rows become one new
+    part file before the old parts are deleted) — no Spark job and no
+    Python worker; elsewhere it is a Spark overwrite."""
     cur = _current_generation(spark, view_name, strict=True)
     gens = list_generations(spark, view_name)
     history = [g for g in gens if g <= cur]
@@ -1412,10 +1477,5 @@ def vacuum_generations(spark: SparkSession, view_name: str,
         # to a dropped snapshot (snapshot-expiry semantics)
         ct = f"{view_name}__commits"
         if spark.catalog.tableExists(ct):
-            kept = [tuple(r) for r in spark.table(ct).collect()
-                    if r["generation"] not in set(drop)]
-            (spark.createDataFrame(
-                kept, "generation long, committed_at timestamp")
-             .write.format("parquet").mode("overwrite")
-             .saveAsTable(ct))
+            _write_timeline(spark, ct, drop=drop)
     return drop

@@ -86,21 +86,19 @@ def shingle_hashes(shingles: Column) -> Column:
     )
 
 
-def minhash_signature(hashed: Column, num_hashes: int = 16) -> list[Column]:
-    """MinHash signatures from a `shingle_hashes` column.
+def minhash_signature(hashed: str, num_hashes: int = 16) -> list[Column]:
+    """MinHash signatures from the `shingle_hashes` column named
+    ``hashed``.
 
     Kirsch-Mitzenmacher: hash function j is (h1 + j*h2) mod 2^32 — all
     exact int64 arithmetic, reproducible in any engine, 16× cheaper
-    than seeded-md5-per-function.
+    than seeded-md5-per-function.  Each hash is one SQL expression:
+    a Python-lambda ``F.transform`` costs ~10 ms of driver-side py4j
+    tracing per hash, the parsed form ~1–2 ms.
     """
-
-    def km(j):
-        # closure, NOT a default arg: pyspark counts lambda params to
-        # bind higher-order functions, so (x, j=j) would mis-bind.
-        return lambda x: (x["h1"] + j * x["h2"]) % F.lit(4294967296)
-
     return [
-        F.array_min(F.transform(hashed, km(j))).alias(f"mh{j}")
+        F.expr(f"array_min(transform(`{hashed}`, "
+               f"x -> (x.h1 + {j} * x.h2) % 4294967296))").alias(f"mh{j}")
         for j in range(num_hashes)
     ]
 
@@ -132,7 +130,7 @@ def minhash_shingles_and_buckets(
     # stage the per-shingle hashes as a real column, then the signature
     # (md5 runs once per shingle, not once per hash function)
     sig = (sh.select("id", shingle_hashes(F.col("sh")).alias("hh"))
-           .select("id", *minhash_signature(F.col("hh"), num_hashes)))
+           .select("id", *minhash_signature("hh", num_hashes)))
     band_cols = [
         F.struct(F.lit(b).alias("band"),
                  F.md5(F.concat_ws("|", *[F.col(f"mh{b * rows + r}").cast("string")
@@ -495,7 +493,14 @@ def ngram_jaccard_pairs(
     matrix never forms and ``array_intersect`` never runs: the work is
     proportional to shared-shingle co-occurrences, not to block size
     squared, and the join key is an 8-byte xxhash64 digest (the span
-    family's internal equality proxy) rather than the shingle string."""
+    family's internal equality proxy) rather than the shingle string.
+
+    ``threshold`` must be positive: a pair with no shared shingle
+    (Jaccard 0) never meets in the postings join, so a threshold ≤ 0
+    could not return the pairs it asks for."""
+    if not threshold > 0:
+        raise ValueError(
+            f"ngram_jaccard_pairs needs threshold > 0, got {threshold}")
     # both self-join sides read the postings — persist so the shingle
     # front (split + zip_with + distinct + explode) runs once.
     posts = tracked_persist(widen_partitions(docs).select(
@@ -705,7 +710,7 @@ def levenshtein_pairs(
     ).filter(F.size("sh") > 0)
     rows = num_hashes // bands
     sig = (sh.select("id", shingle_hashes(F.col("sh")).alias("hh"))
-           .select("id", *minhash_signature(F.col("hh"), num_hashes)))
+           .select("id", *minhash_signature("hh", num_hashes)))
     band_cols = [
         F.struct(F.lit(b).alias("band"),
                  F.md5(F.concat_ws("|", *[F.col(f"mh{b * rows + r}").cast("string")
@@ -1013,6 +1018,13 @@ def _make_roller(k: int, id_name: str, extract):
                 n = np.diff(offs)
                 m = np.maximum(n - (k - 1), 0)
                 total_w = int(m.sum())
+                if total_w >= 2 ** 31:
+                    # the output list offsets are int32 (Spark's
+                    # array type); wrapping them would corrupt digests
+                    raise ValueError(
+                        f"rolling digest batch has {total_w} windows, "
+                        f"over the 2^31 - 1 list-offset limit; lower "
+                        f"spark.sql.execution.arrow.maxRecordsPerBatch")
                 if total_w == 0:
                     out = pa.ListArray.from_arrays(
                         np.zeros(len(n) + 1, dtype=np.int32),

@@ -615,8 +615,8 @@ def test_fast_commit_append_matches_spark_writer_tz(spark, tmp_path):
     writer, asserted under a non-UTC session TZ (the driver probes
     America/New_York)."""
     from legate_dataframe_spark.core.bucketing import (
-        _append_commit_row_fast,
         _record_commit,
+        _write_timeline_spark,
         init_versioned,
         read_asof,
     )
@@ -633,7 +633,7 @@ def test_fast_commit_append_matches_spark_writer_tz(spark, tmp_path):
                        "America/New_York")
         ct = f"{v}__commits"
         # one row through each path, same wall-clock string
-        _append_commit_row_fast(spark, ct, 7, "2024-06-01 12:30:00")
+        _write_timeline_spark(spark, ct, (7, "2024-06-01 12:30:00"), ())
         _record_commit(spark, v, 8, "2024-06-01 12:30:00")
         rows = {r["generation"]: r["committed_at"]
                 for r in spark.table(ct).collect()}

@@ -87,6 +87,37 @@ def test_ngram_inverted_index_randomized(spark):
     assert got == want
 
 
+
+@pytest.mark.parametrize("threshold", [0, 0.0, -0.5])
+def test_ngram_jaccard_pairs_rejects_nonpositive_threshold(spark, threshold):
+    """A pair with no shared shingle never meets in the postings join,
+    so threshold <= 0 would silently drop the Jaccard-0 pairs it asks
+    for; the contract is threshold > 0."""
+    df = spark.createDataFrame([(1, "a", "x y z w")],
+                               "doc_id: long, src: string, text: string")
+    with pytest.raises(ValueError, match="threshold > 0"):
+        dedup.ngram_jaccard_pairs(df, ["src"], threshold=threshold)
+
+
+def test_roller_refuses_int32_offset_overflow():
+    """The roller's output list offsets are int32: a batch with 2^31
+    windows must raise before any window is materialized.  The fake
+    batch claims one 2^31 + k-token document over a one-element value
+    buffer, so the check is reached without the allocation."""
+    import numpy as np
+    import pyarrow as pa
+
+    k = 3
+
+    def extract(b, np_, pa_):
+        return (np.zeros(1, dtype=np.uint64),
+                np.array([0, 2 ** 31 + k - 1], dtype=np.int64))
+
+    roll = dedup._make_roller(k, "id", extract)
+    batch = pa.RecordBatch.from_arrays([pa.array([1], pa.int64())], ["id"])
+    with pytest.raises(ValueError, match="list-offset limit"):
+        next(roll([batch]))
+
 def _dup_groups(kg_rows):
     """digest -> set of (id, pos) occurrence groups with |group| > 1."""
     by_dig = {}

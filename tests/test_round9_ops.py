@@ -352,6 +352,14 @@ def test_concurrent_reader_survives_swap_vacuum_cycles(spark):
                     reads[0] += 1
                 except Exception as ex:
                     msg = repr(ex)[:500]
+                    # a captured Spark exception's repr is empty
+                    # ("AnalysisException()"), so the lists record its
+                    # getCondition()/getMessage() too; the class
+                    # checks below still read only the repr
+                    cond = getattr(ex, "getCondition", lambda: None)()
+                    text = (getattr(ex, "getMessage", lambda: "")()
+                            or str(ex))
+                    rec = f"condition={cond} message={text} {msg}"[:1000]
                     # a vacuumed-underneath-a-slow-scan FILE loss is
                     # the documented retention boundary; a missing
                     # TABLE/VIEW is the repoint gap — the bug under
@@ -362,15 +370,15 @@ def test_concurrent_reader_survives_swap_vacuum_cycles(spark):
                     # path-shaped file losses)
                     if ("TABLE_OR_VIEW_NOT_FOUND" in msg
                             or "TableOrViewNotFound" in msg):
-                        atomicity_errors.append(msg)
+                        atomicity_errors.append(rec)
                     elif ("FileNotFound" in msg
                           or "FILE_NOT_EXIST" in msg
                           or ("does not exist" in msg
                               and ("file:/" in msg
                                    or ".parquet" in msg))):
-                        grace_losses.append(msg)
+                        grace_losses.append(rec)
                     else:
-                        atomicity_errors.append(msg)
+                        atomicity_errors.append(rec)
 
         t = threading.Thread(target=reader, daemon=True)
         t.start()

@@ -997,16 +997,15 @@ def _make_roller(k: int, id_name: str, extract):
             "i": np.array([1], dtype=np.uint64)}
 
     def _upto(n: int):
-        if len(pows["b"]) <= n:
-            old = len(pows["b"])
-            nb = np.empty(n + 1, dtype=np.uint64)
-            ni = np.empty(n + 1, dtype=np.uint64)
-            nb[:old], ni[:old] = pows["b"], pows["i"]
-            for j in range(old, n + 1):
-                nb[j] = nb[j - 1] * B
-                ni[j] = ni[j - 1] * binv
-            pows["b"], pows["i"] = nb, ni
-        return pows["b"], pows["i"]
+        # grow by doubling in C, nb[L:2L] = nb[:L]·B^L — no Python
+        # loop per element (multi-MB documents in the char roller)
+        nb, ni = pows["b"], pows["i"]
+        with np.errstate(over="ignore"):
+            while len(nb) <= n:
+                nb = np.concatenate((nb, nb * (nb[-1] * B)))
+                ni = np.concatenate((ni, ni * (ni[-1] * binv)))
+        pows["b"], pows["i"] = nb, ni
+        return nb, ni
 
     def roll(batches):
         import pyarrow as pa
@@ -1053,6 +1052,9 @@ def _make_roller(k: int, id_name: str, extract):
         finally:
             np.seterr(**old)
 
+    # tests read the tables through this; the growth stays inside the
+    # closure so the pickled kernel needs no package import on workers
+    roll.powers = _upto
     return roll
 
 

@@ -118,6 +118,27 @@ def test_roller_refuses_int32_offset_overflow():
     with pytest.raises(ValueError, match="list-offset limit"):
         next(roll([batch]))
 
+
+def test_roller_power_tables_match_plain_loop():
+    """The roller's power tables grow by doubling in numpy uint64.  At
+    every growth step they must equal, bit for bit, the plain
+    per-element powers B^j and B^-j mod 2^64 over the covered prefix."""
+    mod = 2 ** 64
+    b = dedup._ROLL_B
+    binv = pow(b, -1, mod)
+    n_max = 10 ** 5
+    want_b, want_i = [1], [1]
+    for _ in range(2 * n_max + 1):  # doubling may overshoot n up to 2n
+        want_b.append(want_b[-1] * b % mod)
+        want_i.append(want_i[-1] * binv % mod)
+    powers = dedup._make_roller(3, "id", None).powers
+    for n in (0, 1, 13, 25, 1000, n_max):
+        nb, ni = powers(n)
+        assert len(nb) == len(ni) > n
+        assert nb.tolist() == want_b[:len(nb)]
+        assert ni.tolist() == want_i[:len(ni)]
+
+
 def _dup_groups(kg_rows):
     """digest -> set of (id, pos) occurrence groups with |group| > 1."""
     by_dig = {}

@@ -929,43 +929,21 @@ def bloom_cross_corpus_overlap(
 # token k-grams: a duplicated substring of length ≥ k contains a
 # duplicated k-gram, so k-gram coverage is a superset-marking of
 # every ≥k-token verbatim run shared across documents.
-
-def substring_dup_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-) -> DataFrame:
-    """Per-document coverage of CROSS-DOCUMENT duplicated k-token
-    spans: → (doc_id, n_tokens, covered_tokens, dup_ratio), where
-    covered_tokens counts token positions lying inside at least one
-    k-gram that also appears in ANOTHER document, and dup_ratio is
-    the memorization-risk fraction a span-level dedup pass would
-    remove.  Documents shorter than k tokens carry no k-grams and
-    score 0.
-
-    Scale shape: one narrow tokenize+shingle map (``word_shingles``
-    slices, evaluated once per doc), one groupBy shuffle on the
-    k-gram digest to find cross-doc duplicates (the only
-    corpus-sized exchange, partial-aggregated map-side), a semi-join
-    of the shingle stream against the duplicated-digest set (no
-    broadcast assumption — boilerplate digests can be corpus-scale),
-    and a bounded ×k position explode of ONLY the duplicated
-    shingles.  No suffix array, no all-pairs, nothing driver-side.
-    """
-    base, kg = _doc_kgrams(docs, text_col, id_col, k)
-    # kg feeds TWO branches (the dup-digest aggregate and the covered
-    # semi-join) and Spark has no cross-branch CSE, so the digest
-    # build — the family's dominant narrow cost, O(k·n) hashing per
-    # doc — would run twice.  Materialize the positional digest
-    # stream once (write-once/read-twice beats compute-twice; the
-    # same trade clean_corpus makes with its occurrence aggregate).
-    kg = kg.localCheckpoint(eager=True)
-    dup = (kg.groupBy("dig")
-           .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-           .filter(F.col("nd") > 1).select("dig"))
-    return _span_coverage(base, kg, dup, id_col, k)
-
+#
+# Every span operator runs ONE engine in three stages:
+#   front   (_doc_kgrams) — word, raw or char text → (base, kg): kg is
+#           the positional (id, pos, dig) window-digest stream, base
+#           holds what the rebuild reads;
+#   cover   (_cover) — a start stream (the kg rows a predicate marks)
+#           → covered positions, with a per-predicate mask when the
+#           cut attributes its removals;
+#   rebuild (_span_cut) — one select builds the kept text and its
+#           accounting.
+# The operators differ only in their start stream: cross-doc
+# (_crossdoc_starts), index-gated (_gated_starts), benchmark
+# (_benchmark_cut), intra-doc (remove_repeated_spans) or the composed
+# union (_composed).  Each start stream keeps the shape measured
+# fastest for its predicate; the stages after it are shared.
 
 _ROLL_B = 0x9E3779B97F4A7C15  # odd ⇒ multiplication is a bijection mod 2^64
 
@@ -1061,8 +1039,7 @@ def _make_roller(k: int, id_name: str, extract):
 def _rolling_digest_fn(k: int, id_name: str):
     """Roller over a pre-hashed token column ``__h`` (array<bigint>,
     one xxhash64 long per token — the JVM does that single O(n)
-    string pass; the window digests are then O(n) here instead of the
-    O(k·n) per-position slice hashing of the r13 form)."""
+    string pass; the window digests are then O(n) here)."""
 
     def extract(b, np, pa):
         lst = b.column(b.schema.get_field_index("__h"))
@@ -1082,10 +1059,8 @@ def _rolling_char_digest_fn(k: int, id_name: str):
     """Roller over the raw text column ``__t``: decode each document
     to codepoints (utf-32, one C-speed pass per row), mix every
     codepoint through the splitmix64 finalizer for 64-bit dispersion,
-    then the shared O(n) rolling window.  Replaces the r13 char front
-    (split('') to a per-char string array + xxhash64 over a k-char
-    slice per position — O(k·n) with n = characters, the span
-    family's most expensive digest build)."""
+    then the shared O(n) rolling window.  No per-character string
+    array is ever built."""
 
     def extract(b, np, pa):
         col = b.column(b.schema.get_field_index("__t"))
@@ -1106,64 +1081,252 @@ def _rolling_char_digest_fn(k: int, id_name: str):
     return _make_roller(k, id_name, extract)
 
 
-def _rolled_kgrams(hashed, id_col: str, k: int):
-    """(id, pos, dig) positional window-digest stream from an
-    (id, __h array<bigint>) element-hash frame via the rolling
-    kernel; pos is 1-based, docs shorter than k emit nothing."""
+def _doc_kgrams(docs, text_col: str, id_col: str, k: int,
+                front: str = "word"):
+    """The span family's front → (base, kg).  ``kg`` is the positional
+    (id, pos, dig) k-window digest stream (pos 1-based; documents
+    shorter than k emit nothing), rolled by ONE vectorized mapInArrow
+    kernel for every front and every k.  ``base`` holds what the
+    rebuild reads:
+
+    - ``word``: (id, ts) — lowercased, trimmed, ``\\s+``-split tokens;
+      each token is hashed once in the JVM (xxhash64).
+    - ``raw``: (id, tr, sp) — the ``\\S+`` tokens and the separators
+      between them, from the ``\\s``-stripped ORIGINAL text, so the
+      rewrite is byte-faithful while digests hash lowercased tokens
+      (detection case-insensitive).  Both sides of a raw cut must
+      shingle through this front: the word front's ``trim()`` strips
+      ASCII spaces only, so its positions can shift by one on
+      leading-tab documents.
+    - ``char``: (id, __t, __n) — the text itself; windows are k
+      codepoints (case-sensitive).
+
+    Digests are internal equality proxies on both sides of every
+    oracle, so the digest FUNCTION only has to be deterministic and
+    collision-free at corpus scale (see ``_make_roller``); the 8-byte
+    long digest keeps every dig-keyed exchange and persisted index
+    row small."""
+    if front == "char":
+        base = docs.select(F.col(id_col), F.col(text_col).alias("__t"),
+                           F.length(F.col(text_col)).alias("__n"))
+        hashed = base.filter(F.col("__n") >= k).select(id_col, "__t")
+        roller = _rolling_char_digest_fn
+    else:
+        if front == "word":
+            base = docs.select(
+                F.col(id_col),
+                F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+                .alias("ts"))
+            h = F.transform("ts", lambda t: F.xxhash64(t))
+        else:
+            stripped = (f"regexp_replace({text_col}, "
+                        f"'^\\\\s+|\\\\s+$', '')")
+            base = docs.select(
+                F.col(id_col),
+                F.expr(f"regexp_extract_all({stripped}, '\\\\S+', 0)")
+                .alias("tr"),
+                F.expr(f"regexp_extract_all({stripped}, '\\\\s+', 0)")
+                .alias("sp"))
+            h = F.transform("tr", lambda t: F.xxhash64(F.lower(t)))
+        hashed = base.select(F.col(id_col), h.alias("__h"))
+        roller = _rolling_digest_fn
     id_field = hashed.schema[id_col]
     out_type = T.StructType([
         id_field,
         T.StructField("__digs", T.ArrayType(T.LongType(), False), True),
     ])
-    digs = hashed.mapInArrow(_rolling_digest_fn(k, id_field.name),
-                             out_type)
-    return (digs.select(id_col, F.posexplode("__digs")
-                        .alias("off", "dig"))
-            .select(id_col, (F.col("off") + 1).alias("pos"), "dig"))
-
-
-def _doc_kgrams(docs, text_col: str, id_col: str, k: int):
-    """(per-doc sizes frame, positional k-gram digest stream) — the
-    shared front of the substring-span family.
-
-    r14: ONE builder for every k — hash each token once in the JVM
-    (a single O(n) xxhash64 pass over the split) and roll an O(n)
-    polynomial window digest over the longs in vectorized numpy via
-    mapInArrow (guide §4.2).  Replaces two r13 builders: the
-    zip_with shingle chain + md5 (k≤12 — O(k²·n) character work per
-    doc, and a 32-char string digest riding the one corpus-sized
-    exchange) and the per-position k-token slice xxhash64 (k>12 —
-    O(k·n) string hashing, the dominant stage of the k=50 BPE cut).
-    Measured fronts at sf0.1: k=8 0.58 s vs 1.40 s md5, k=50 0.88 s
-    vs 3.56 s slices, identical duplicated-digest classes both
-    times; the 8-byte long digest also shrinks every downstream
-    dig-keyed exchange and persisted index row.  Digests are
-    internal equality proxies on both sides of every oracle, so the
-    digest FUNCTION is free to differ from DuckDB's md5 as long as
-    it is deterministic and collision-free at corpus scale — both
-    hold (see ``_rolling_digest_fn``)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    base = docs.select(F.col(id_col),
-                       F.size(toks).cast("long").alias("n_tokens"),
-                       toks.alias("__ts"))
-    kg = _rolled_kgrams(
-        docs.select(F.col(id_col),
-                    F.transform(toks, lambda t: F.xxhash64(t))
-                    .alias("__h")),
-        id_col, k)
+    digs = hashed.mapInArrow(roller(k, id_field.name), out_type)
+    kg = (digs.select(id_col, F.posexplode("__digs").alias("off", "dig"))
+          .select(id_col, (F.col("off") + 1).alias("pos"), "dig"))
     return base, kg
 
 
-def _span_coverage(base, kg, dup_digs, id_col: str, k: int):
-    """Covered-token accounting over a duplicated-digest set — only
-    duplicated shingles pay the ×k position explode."""
-    covered = (kg.join(dup_digs, "dig", "left_semi")
-               .select(id_col, F.explode(F.sequence(
-                   F.col("pos"), F.col("pos") + F.lit(k - 1))).alias("t"))
-               .distinct()
+def _dup_digs(counts, spark=None, table_prefix=None):
+    """Cross-document duplicated digests from per-digest document
+    counts (dig, nd): nd > 1 — or, index-gated, nd > 1 OR the digest
+    is in the persisted ``{table_prefix}_kgrams`` index (some admitted
+    document carries it; the batch occurrence is the second).  The
+    gate is one left join against the bucketed index, not a
+    two-branch union."""
+    keep = F.col("nd") > 1
+    if table_prefix is not None:
+        from legate_dataframe_spark.core.bucketing import read_bucketed
+
+        idx = read_bucketed(spark, f"{table_prefix}_kgrams").select("dig")
+        counts = counts.join(idx.withColumn("__in_idx", F.lit(1)),
+                             "dig", "left")
+        keep = keep | F.col("__in_idx").isNotNull()
+    return counts.filter(keep).select("dig")
+
+
+def _doc_counts(kg, id_col: str, name: str):
+    """(dig, name): distinct documents per digest."""
+    return (kg.select("dig", id_col).distinct()
+            .groupBy("dig").agg(F.count(F.lit(1)).alias(name)))
+
+
+def _crossdoc_starts(kg, id_col: str):
+    """Full-corpus cross-doc start stream: the kg rows whose digest
+    occurs in ≥2 documents.  kg feeds two branches (the digest count
+    and the semi-join) and Spark has no cross-branch CSE, so without
+    a materialization the digest front would run once per branch
+    (measured 2× its cost end-to-end at sf0.1): write once, read
+    twice."""
+    kg = kg.localCheckpoint(eager=True)
+    counts = (kg.groupBy("dig")
+              .agg(F.count_distinct(F.col(id_col)).alias("nd")))
+    return kg.join(_dup_digs(counts), "dig", "left_semi")
+
+
+def _gated_starts(spark, kg, table_prefix: str, id_col: str):
+    """Index-gated cross-doc start stream of a batch (against corpus ∪
+    batch).  Not checkpointed: a per-trigger materialization barrier
+    costs the streaming chains more than the batch-sized digest
+    re-evaluation it would spare."""
+    dup = _dup_digs(_doc_counts(kg, id_col, "nd"), spark, table_prefix)
+    return kg.join(dup, "dig", "left_semi")
+
+
+def _cover(starts, id_col: str, k: int, out: str = "pos",
+           masked: bool = False):
+    """Start stream (id, pos[, mask]) → covered positions ``out``:
+    each start covers [pos, pos + k − 1], so only starts pay the ×k
+    explode.  Unmasked, the result is the distinct (id, out) set;
+    masked, every covered position keeps the mask of each start
+    covering it (the attribution counts dedupe downstream)."""
+    keep = [F.col(id_col)] + ([F.col("mask")] if masked else [])
+    cov = starts.select(*keep, F.explode(F.sequence(
+        F.col("pos"), F.col("pos") + F.lit(k - 1))).alias(out))
+    return cov if masked else cov.distinct()
+
+
+# per-predicate attribution: (output column, start-mask bit)
+_ATTRIBUTION = (("cov_benchmark", 4), ("cov_crossdoc", 2),
+                ("cov_intradoc", 1))
+
+
+def _span_cut(base, starts, id_col: str, k: int, front: str = "word",
+              attributed: bool = False):
+    """Cover + rebuild: cut every position a start covers from base's
+    text → (id, n_*, removed_*, kept_*, dup_ratio[, cov_*],
+    text_clean*).
+
+    Tokens never shuffle: each document's cover aggregates to one
+    array (dup-mass-sized shuffle), one doc-count-sized join attaches
+    it to the base row, and one select — all whole-stage codegen —
+    rebuilds the text and its accounting:
+
+    - ``word``: kept positions = ``array_except(sequence(1, n),
+      cov)`` (order-preserving), joined with single spaces.
+    - ``raw``: the same kept positions; a kept token glues to its
+      ORIGINAL left separator when its left neighbor was kept too,
+      else to one space.
+    - ``char``: covered windows merge into intervals per document
+      (an islands window over the dup-mass-sized starts — no ×k
+      explode at all), and the text is the ``substring`` slices of
+      the kept gaps.  Per-row state is O(intervals), not O(chars).
+
+    A null text has no positions: its cleaned text, size, kept count
+    and ratio are null, and it removes nothing."""
+    if front == "char":
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(id_col).orderBy("pos")
+        prev_end = F.max("end").over(
+            w.rowsBetween(Window.unboundedPreceding, -1))
+        cov = (starts.select(id_col, "pos",
+                             (F.col("pos") + F.lit(k - 1)).alias("end"))
+               .withColumn("new_grp",
+                           F.when(prev_end.isNull()
+                                  | (F.col("pos") > prev_end + 1), 1)
+                           .otherwise(0))
+               .withColumn("grp", F.sum("new_grp").over(
+                   w.rowsBetween(Window.unboundedPreceding, 0)))
+               .groupBy(id_col, "grp")
+               .agg(F.min("pos").alias("s"), F.max("end").alias("e"))
                .groupBy(id_col)
+               .agg(F.sort_array(F.collect_list(F.struct("s", "e")))
+                    .alias("iv")))
+    elif attributed:
+        cov = (_cover(starts, id_col, k, "p", masked=True)
+               .groupBy(id_col)
+               .agg(F.collect_set("p").alias("cov"),
+                    *[F.count_distinct(
+                        F.when(F.col("mask").bitwiseAND(bit) > 0,
+                               F.col("p"))).alias(name)
+                      for name, bit in _ATTRIBUTION]))
+    else:
+        cov = (_cover(starts, id_col, k).groupBy(id_col)
+               .agg(F.collect_list("pos").alias("cov")))
+    j = base.join(cov, id_col, "left")
+    if front == "char":
+        n, unit, name = F.col("__n"), "chars", "text_clean_chars"
+        ivs = F.coalesce(F.col("iv"), F.when(
+            n.isNotNull(), F.array().cast("array<struct<s:int,e:int>>")))
+        removed = F.coalesce(
+            F.aggregate(ivs, F.lit(0),
+                        lambda a, x: a + x["e"] - x["s"] + 1), F.lit(0))
+        # kept gaps: starts = 1 ∪ (each island's e+1); ends = (each
+        # island's s-1) ∪ n — zip to substring slices, empty when b < a
+        text = F.array_join(F.zip_with(
+            F.concat(F.array(F.lit(1)),
+                     F.transform(ivs, lambda x: x["e"] + 1)),
+            F.concat(F.transform(ivs, lambda x: x["s"] - 1),
+                     F.array(n)),
+            lambda a, b: F.when(b >= a, F.col("__t").substr(a, b - a + 1))
+            .otherwise(F.lit(""))), "")
+    else:
+        toks = "ts" if front == "word" else "tr"
+        n, unit = F.size(toks), "tokens"
+        removed = F.coalesce(F.size("cov"), F.lit(0))
+        # a word doc always has ≥1 token (split('') is ['']); a raw
+        # one may have none, and sequence(1, 0) would count down
+        every = F.sequence(F.lit(1), n)
+        if front == "raw":
+            every = F.when(n == 0, F.array().cast("array<int>")) \
+                .otherwise(every)
+        # array_except preserves the LEFT array's order, so ascending
+        # kept positions rebuild the residual text in document order
+        kept = F.array_except(
+            every, F.coalesce(F.col("cov"), F.array().cast("array<int>")))
+        if front == "word":
+            name = "text_clean"
+            text = F.array_join(F.transform(
+                kept, lambda i: F.element_at(F.col("ts"), i)), " ")
+        else:
+            # kept token i (1-based) glues to separator sp[i-1] when
+            # token i-1 was kept too; F.get is 0-based, idx is the
+            # lambda's 0-based array index
+            name = "text_clean_raw"
+            text = F.array_join(F.transform(
+                kept,
+                lambda i, idx: F.when(idx == 0, F.get(F.col("tr"), i - 1))
+                .when(F.get(kept, idx - 1) == i - 1,
+                      F.concat(F.get(F.col("sp"), i - 2),
+                               F.get(F.col("tr"), i - 1)))
+                .otherwise(F.concat(F.lit(" "),
+                                    F.get(F.col("tr"), i - 1)))), "")
+    ratio = F.round(removed / n, 6)
+    if front != "word":
+        ratio = F.when(n == 0, F.lit(0.0)).otherwise(ratio)
+    return j.select(
+        id_col,
+        n.cast("long").alias(f"n_{unit}"),
+        removed.cast("long").alias(f"removed_{unit}"),
+        (n - removed).cast("long").alias(f"kept_{unit}"),
+        ratio.alias("dup_ratio"),
+        *[F.coalesce(c, F.lit(0)).cast("long").alias(c)
+          for c, _ in (_ATTRIBUTION if attributed else ())],
+        text.alias(name))
+
+
+def _span_coverage(base, starts, id_col: str, k: int):
+    """Covered-token accounting (no rebuild) → (id, n_tokens,
+    covered_tokens, dup_ratio)."""
+    covered = (_cover(starts, id_col, k, "t").groupBy(id_col)
                .agg(F.count(F.lit(1)).alias("covered_tokens")))
-    return (base.select(id_col, "n_tokens")
+    return (base.select(id_col, F.size("ts").cast("long")
+                        .alias("n_tokens"))
             .join(covered, id_col, "left")
             .select(id_col, "n_tokens",
                     F.coalesce("covered_tokens", F.lit(0))
@@ -1171,6 +1334,33 @@ def _span_coverage(base, kg, dup_digs, id_col: str, k: int):
             .withColumn("dup_ratio",
                         F.round(F.col("covered_tokens")
                                 / F.col("n_tokens"), 6)))
+
+
+def substring_dup_spans(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 8,
+) -> DataFrame:
+    """Per-document coverage of CROSS-DOCUMENT duplicated k-token
+    spans: → (doc_id, n_tokens, covered_tokens, dup_ratio), where
+    covered_tokens counts token positions lying inside at least one
+    k-gram that also appears in ANOTHER document, and dup_ratio is
+    the memorization-risk fraction a span-level dedup pass would
+    remove.  Documents shorter than k tokens carry no k-grams and
+    score 0.
+
+    Scale shape: one narrow tokenize + rolling-digest map, one
+    groupBy shuffle on the k-gram digest to find cross-doc duplicates
+    (the only corpus-sized exchange, partial-aggregated map-side), a
+    semi-join of the digest stream against the duplicated-digest set
+    (no broadcast assumption — boilerplate digests can be
+    corpus-scale), and a bounded ×k position explode of ONLY the
+    duplicated shingles.  No suffix array, no all-pairs, nothing
+    driver-side.
+    """
+    base, kg = _doc_kgrams(docs, text_col, id_col, k)
+    return _span_coverage(base, _crossdoc_starts(kg, id_col), id_col, k)
 
 
 def remove_dup_spans(
@@ -1193,81 +1383,17 @@ def remove_dup_spans(
     ``removed_tokens`` equals :func:`substring_dup_spans`'s
     ``covered_tokens`` by construction (both derive from the same
     covered-position set), so the accounting reconciles exactly with
-    the dup_ratio signal.
+    the dup_ratio signal.  A null text gives a null ``text_clean``
+    (null n_tokens/kept_tokens/dup_ratio, nothing removed).
 
     Scale shape: the k-gram digest groupBy is the one corpus-sized
     exchange (shared with the signal query); only duplicated shingles
-    pay the ×k position explode; and only TOUCHED documents (those
-    with ≥1 covered position — a small fraction of a mostly-clean
-    corpus) pay the per-token explode → anti-join → ordered rebuild.
-    Untouched documents take a narrow JVM map (tokenize + re-join) and
-    never shuffle.  Nothing is driver-side; no suffix array, no
-    all-pairs."""
-    _, kg = _doc_kgrams(docs, text_col, id_col, k)
-    # one materialization of the positional digest stream: kg feeds
-    # both the dup-digest aggregate and the covered semi-join, and
-    # without it the O(k·n) digest build runs once per branch
-    # (measured 2x the digest cost end-to-end at sf0.1; the k=50 BPE
-    # cut pays it hardest).  Same write-once/read-twice trade as
-    # clean_corpus's checkpointed occurrence aggregate.
-    kg = kg.localCheckpoint(eager=True)
-    dup = (kg.groupBy("dig")
-           .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-           .filter(F.col("nd") > 1).select("dig"))
-    return _span_removal(docs, kg, dup, text_col, id_col, k)
-
-
-def _covered_positions(kg, dup_digs, id_col: str, k: int):
-    """Distinct (doc, position) pairs covered by a duplicated k-gram —
-    the shared core of the span family: only duplicated shingles pay
-    the ×k explode."""
-    return (kg.join(dup_digs, "dig", "left_semi")
-            .select(id_col, F.explode(F.sequence(
-                F.col("pos"), F.col("pos") + F.lit(k - 1)))
-                .alias("pos"))
-            .distinct())
-
-
-def _span_removal(docs, kg, dup_digs, text_col: str, id_col: str,
-                  k: int):
-    """Cut machinery over an arbitrary duplicated-digest set — shared
-    by the full-corpus and the index-gated (incremental) forms.
-
-    The cut itself is per-document JVM array arithmetic — tokens
-    NEVER shuffle: each doc's covered positions aggregate to one
-    array (dup-mass-sized shuffle), one doc-count-sized join attaches
-    it to the token array, and the residual text is
-    ``array_except(sequence(1, n), covered) → element_at → join`` —
-    all inside whole-stage codegen.  (The first cut of this operator
-    exploded every touched doc's tokens through an anti-join and an
-    ordered re-collect — three shuffles of token streams that this
-    shape avoids entirely; measured ~15% faster end-to-end at sf0.1,
-    where the shared k-gram digest groupBy dominates both forms.)"""
-    toks = docs.select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("ts"))
-    covered = _covered_positions(kg, dup_digs, id_col, k)
-    cov_arr = (covered.groupBy(id_col)
-               .agg(F.collect_list("pos").alias("cov")))
-    j = toks.join(cov_arr, id_col, "left")
-    cov = F.coalesce(F.col("cov"), F.array().cast("array<int>"))
-    # array_except preserves the LEFT array's order, so ascending
-    # kept positions rebuild the residual text in document order
-    kept_pos = F.array_except(
-        F.sequence(F.lit(1), F.size("ts")), cov)
-    return j.select(
-        id_col,
-        F.size("ts").cast("long").alias("n_tokens"),
-        F.coalesce(F.size("cov"), F.lit(0)).cast("long")
-        .alias("removed_tokens"),
-        (F.size("ts") - F.coalesce(F.size("cov"), F.lit(0)))
-        .cast("long").alias("kept_tokens"),
-        F.round(F.coalesce(F.size("cov"), F.lit(0))
-                / F.size("ts"), 6).alias("dup_ratio"),
-        F.array_join(
-            F.transform(kept_pos,
-                        lambda i: F.element_at(F.col("ts"), i)),
-            " ").alias("text_clean"))
+    pay the ×k position explode; tokens never shuffle — each touched
+    document's covered positions aggregate to one array and the
+    rebuild is codegen array arithmetic (:func:`_span_cut`).  Nothing
+    is driver-side; no suffix array, no all-pairs."""
+    base, kg = _doc_kgrams(docs, text_col, id_col, k)
+    return _span_cut(base, _crossdoc_starts(kg, id_col), id_col, k)
 
 
 def remove_dup_spans_raw(
@@ -1284,60 +1410,29 @@ def remove_dup_spans_raw(
     byte of the kept token runs INCLUDING their internal separators,
     each cut span collapses to a single space, and leading/trailing
     whitespace is trimmed.  Duplicate detection is case-insensitive
-    (digests over lowercased k-grams — the same duplicated-span set
+    (digests over lowercased tokens — the same duplicated-span set
     as :func:`remove_dup_spans`); the REWRITE is byte-preserving.
+    A null text gives a null ``text_clean_raw`` (null
+    n_tokens/kept_tokens/dup_ratio, nothing removed).
 
-    Mechanics, all JVM-side: tokens and separators come from two
-    ``regexp_extract_all`` passes over the trimmed text (trimmed, so
-    separators sit exactly BETWEEN tokens: sep[i] separates token i
-    from token i+1); k-gram digests are built from the same token
-    array (``slice`` + ``lower``), so covered positions index the
-    raw tokens exactly; the rebuild walks the kept positions with an
-    index-aware ``transform`` — a kept token glues to its ORIGINAL
-    left separator when its left neighbor was also kept, else to one
-    space.  Tokens never shuffle (same plan shape as
-    :func:`remove_dup_spans`)."""
-    # tokenize + digest through _raw_kgrams (the \s-strip semantics
-    # and the rolling digest front are defined ONCE there)
-    base, kg = _raw_kgrams(docs, text_col, id_col, k)
-    n = F.size("tr")
-    # kg feeds both the dup-digest aggregate and the covered
-    # semi-join; no cross-branch CSE, so without this the digest
-    # build (regexp tokenize + rolling window digests) runs twice.
-    # Same write-once/read-twice trade as remove_dup_spans.
-    kg = kg.localCheckpoint(eager=True)
-    dup = (kg.groupBy("dig")
-           .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-           .filter(F.col("nd") > 1).select("dig"))
-    covered = _covered_positions(kg.select(id_col, "pos", "dig"),
-                                 dup, id_col, k)
-    cov_arr = (covered.groupBy(id_col)
-               .agg(F.collect_list("pos").alias("cov")))
-    j = base.join(cov_arr, id_col, "left")
-    cov = F.coalesce(F.col("cov"), F.array().cast("array<int>"))
-    kept_pos = F.array_except(
-        F.when(n >= 1, F.sequence(F.lit(1), n))
-        .otherwise(F.array().cast("array<int>")), cov)
-    # the rebuild: kept token i (1-based) glues to its ORIGINAL left
-    # separator sp[i-1] when token i-1 was kept too (the previous
-    # kept position is i-1); a cut between them collapses to ' '.
-    # F.get is 0-based; idx is the lambda's 0-based array index.
-    piece = F.transform(
-        kept_pos,
-        lambda i, idx: F.when(idx == 0, F.get(F.col("tr"), i - 1))
-        .when(F.get(kept_pos, idx - 1) == i - 1,
-              F.concat(F.get(F.col("sp"), i - 2),
-                       F.get(F.col("tr"), i - 1)))
-        .otherwise(F.concat(F.lit(" "), F.get(F.col("tr"), i - 1))))
-    n_removed = F.coalesce(F.size("cov"), F.lit(0))
-    return j.select(
-        id_col,
-        n.cast("long").alias("n_tokens"),
-        n_removed.cast("long").alias("removed_tokens"),
-        (n - n_removed).cast("long").alias("kept_tokens"),
-        F.when(n == 0, F.lit(0.0))
-        .otherwise(F.round(n_removed / n, 6)).alias("dup_ratio"),
-        F.array_join(piece, "").alias("text_clean_raw"))
+    Mechanics, all JVM-side apart from the rolling digest: tokens and
+    separators come from two ``regexp_extract_all`` passes over the
+    stripped text (separators sit exactly BETWEEN tokens: sep[i]
+    separates token i from token i+1), digests from the same token
+    array, so covered positions index the raw tokens exactly.  Tokens
+    never shuffle (same plan shape as :func:`remove_dup_spans`)."""
+    base, kg = _doc_kgrams(docs, text_col, id_col, k, "raw")
+    return _span_cut(base, _crossdoc_starts(kg, id_col), id_col, k,
+                     "raw")
+
+
+def _benchmark_cut(train, bench_digs, text_col: str, id_col: str,
+                   k: int):
+    """The benchmark start stream: train kg rows whose digest is in
+    ``bench_digs`` — one test occurrence is already contamination."""
+    base, kg = _doc_kgrams(train, text_col, id_col, k)
+    return _span_cut(base, kg.join(bench_digs, "dig", "left_semi"),
+                     id_col, k)
 
 
 def remove_contaminated_spans(
@@ -1355,21 +1450,21 @@ def remove_contaminated_spans(
     span cut keeps the rest of the document, losing only the leaked
     benchmark text).  Same output schema as :func:`remove_dup_spans`
     (n_tokens, removed_tokens, kept_tokens, dup_ratio, text_clean)
-    over the train side.  A test k-gram marks train positions whether
-    or not any train document shares it with ANOTHER train document —
-    one occurrence of benchmark text is already contamination.
+    over the train side, null texts included.  A test k-gram marks
+    train positions whether or not any train document shares it with
+    ANOTHER train document — one occurrence of benchmark text is
+    already contamination.
 
-    Scale shape: the train side pays exactly the
-    :func:`remove_dup_spans` plan (one corpus-sized digest exchange,
-    explode only on contaminated shingles, codegen rebuild); the test
-    side — benchmark suites, orders of magnitude smaller than the
-    corpus — contributes one distinct-digest set to the semi-join
-    (NOT force-broadcast: "benchmark-sized" is usually small but is
-    not a bound, and AQE broadcasts it when it is)."""
-    _, kg = _doc_kgrams(train, text_col, id_col, k)
-    _, test_kg = _doc_kgrams(test, text_col, id_col, k)
-    return _span_removal(train, kg, test_kg.select("dig").distinct(),
-                         text_col, id_col, k)
+    Scale shape: the train side pays the :func:`remove_dup_spans`
+    plan minus its cross-doc aggregate (explode only on contaminated
+    shingles, codegen rebuild); the test side — benchmark suites,
+    orders of magnitude smaller than the corpus — contributes one
+    distinct-digest set to the semi-join (NOT force-broadcast:
+    "benchmark-sized" is usually small but is not a bound, and AQE
+    broadcasts it when it is)."""
+    return _benchmark_cut(
+        train, _doc_kgrams(test, text_col, id_col, k)[1]
+        .select("dig").distinct(), text_col, id_col, k)
 
 
 def remove_repeated_spans(
@@ -1387,10 +1482,10 @@ def remove_repeated_spans(
     keep-first policy: a position is covered iff it lies inside a
     k-window whose k-gram has an occurrence starting at a STRICTLY
     EARLIER position in the same document.  Same output schema as
-    :func:`remove_dup_spans`.
+    :func:`remove_dup_spans`, null texts included.
 
     Scale shape: the duplicated-window detection is a per-(doc,
-    digest) min-position aggregate — partitioned BY DOCUMENT, so the
+    digest) min-position window — partitioned BY DOCUMENT, so the
     exchange key space is the corpus's shingle stream but every
     group is doc-local (no cross-doc hot digests: the boilerplate
     k-gram that appears in a billion documents lands in a billion
@@ -1399,34 +1494,12 @@ def remove_repeated_spans(
     arithmetic."""
     from pyspark.sql import Window
 
-    _, kg = _doc_kgrams(docs, text_col, id_col, k)
+    base, kg = _doc_kgrams(docs, text_col, id_col, k)
     w = Window.partitionBy(id_col, "dig")
     repeats = (kg.withColumn("first_pos", F.min("pos").over(w))
                .filter(F.col("pos") > F.col("first_pos"))
                .select(id_col, "pos"))
-    covered = (repeats.select(id_col, F.explode(F.sequence(
-        F.col("pos"), F.col("pos") + F.lit(k - 1))).alias("pos"))
-        .distinct())
-    toks = docs.select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("ts"))
-    cov_arr = (covered.groupBy(id_col)
-               .agg(F.collect_list("pos").alias("cov")))
-    j = toks.join(cov_arr, id_col, "left")
-    kept_pos = F.array_except(
-        F.sequence(F.lit(1), F.size("ts")),
-        F.coalesce(F.col("cov"), F.array().cast("array<int>")))
-    n_removed = F.coalesce(F.size("cov"), F.lit(0))
-    return j.select(
-        id_col,
-        F.size("ts").cast("long").alias("n_tokens"),
-        n_removed.cast("long").alias("removed_tokens"),
-        (F.size("ts") - n_removed).cast("long").alias("kept_tokens"),
-        F.round(n_removed / F.size("ts"), 6).alias("dup_ratio"),
-        F.array_join(
-            F.transform(kept_pos,
-                        lambda i: F.element_at(F.col("ts"), i)),
-            " ").alias("text_clean"))
+    return _span_cut(base, repeats, id_col, k)
 
 
 def _iterate_span_cut(first: DataFrame, recut, id_col: str,
@@ -1506,17 +1579,15 @@ def remove_contaminated_spans_fixpoint(
     ones measured) the extra cost is one convergence probe over the
     pass-1 TOUCHED documents (uncut docs carry the zero-leak law by
     construction — see :func:`_iterate_span_cut`'s contract) and the
-    result is IDENTICAL to the single pass."""
+    result is IDENTICAL to the single pass.  A null text gives a null
+    ``text_clean``, as in the single pass."""
     test_digs = (_doc_kgrams(test, text_col, id_col, k)[1]
                  .select("dig").distinct().localCheckpoint(eager=True))
 
     def recut(frame: DataFrame) -> DataFrame:
-        _, kg = _doc_kgrams(frame, "text", id_col, k)
-        return _span_removal(frame, kg, test_digs, "text", id_col, k)
+        return _benchmark_cut(frame, test_digs, "text", id_col, k)
 
-    first = _span_removal(
-        train, _doc_kgrams(train, text_col, id_col, k)[1], test_digs,
-        text_col, id_col, k)
+    first = _benchmark_cut(train, test_digs, text_col, id_col, k)
     return _iterate_span_cut(first, recut, id_col, max_iters)
 
 
@@ -1537,7 +1608,8 @@ def remove_repeated_spans_fixpoint(
     rule.  Identical to the single pass whenever pass 2 removes
     nothing (all real corpora measured); each probe pass recuts only
     the documents the previous pass touched (uncut docs are
-    idempotent by construction — :func:`_iterate_span_cut`)."""
+    idempotent by construction — :func:`_iterate_span_cut`).  A null
+    text gives a null ``text_clean``, as in the single pass."""
 
     def recut(frame: DataFrame) -> DataFrame:
         return remove_repeated_spans(frame, "text", id_col, k)
@@ -1545,6 +1617,68 @@ def remove_repeated_spans_fixpoint(
     return _iterate_span_cut(
         remove_repeated_spans(docs, text_col, id_col, k),
         recut, id_col, max_iters)
+
+
+def _composed(docs, benchmarks, text_col: str, id_col: str, k: int,
+              front: str, spark=None, table_prefix=None,
+              explain_occ: bool = False):
+    """The composed start stream (benchmark ∪ cross-doc ∪ intra-doc,
+    each with its mask bit) through the attributed cut → (cut, occ's
+    formatted physical plan captured BEFORE checkpointing, or None).
+    With ``table_prefix`` the cross-doc predicate is index-gated.
+
+    ONE dig-keyed flags table (benchmark ∪ crossdoc marks), ONE join
+    against occ, ONE explode carrying a predicate BITMASK — not three
+    tagged start streams: on heavily-duplicated corpora the benchmark
+    and crossdoc covers are each ~every position, so per-predicate
+    streams explode the same windows 2–3× (measured 2× the SUM of the
+    individual cuts at the 10× replica layout)."""
+    base, kg = _doc_kgrams(docs, text_col, id_col, k, front)
+    # unsorted collect_list: the keep-first rule needs only the
+    # MINIMUM position, computed per row before the explode
+    occ = (kg.groupBy(id_col, "dig")
+           .agg(F.collect_list("pos").alias("poss")))
+    occ_plan = None
+    if explain_occ:
+        import contextlib
+        import io
+
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            occ.explain(mode="formatted")
+        occ_plan = buf.getvalue()
+    occ = occ.localCheckpoint(eager=True)
+    bench_digs = (_doc_kgrams(benchmarks, text_col, id_col, k, front)[1]
+                  .select("dig").distinct())
+    # one row per (doc, dig) ⇒ count(*) per dig == count_distinct(doc)
+    crossdup_digs = _dup_digs(
+        occ.groupBy("dig").agg(F.count(F.lit(1)).alias("nd")),
+        spark, table_prefix)
+    dig_flags = (crossdup_digs.withColumn("c", F.lit(True))
+                 .join(bench_digs.withColumn("b", F.lit(True)),
+                       "dig", "full")
+                 .select("dig", F.coalesce("b", F.lit(False)).alias("b"),
+                         F.coalesce("c", F.lit(False)).alias("c")))
+    hits = (occ.join(dig_flags, "dig", "left")
+            .select(id_col, "poss",
+                    F.array_min("poss").alias("fp"),
+                    F.coalesce("b", F.lit(False)).alias("b"),
+                    F.coalesce("c", F.lit(False)).alias("c"))
+            .filter(F.col("b") | F.col("c")
+                    | (F.size("poss") > 1)))
+    # keep-first rule: a start is an intra-doc repeat iff it is not
+    # the group's MINIMUM position; b/c apply to every occurrence
+    starts = (hits.select(
+        F.col(id_col), F.col("b"), F.col("c"), F.col("fp"),
+        F.explode("poss").alias("pos"))
+        .select(id_col, "pos",
+                (F.when(F.col("b"), 4).otherwise(0)
+                 + F.when(F.col("c"), 2).otherwise(0)
+                 + F.when(F.col("pos") > F.col("fp"), 1).otherwise(0))
+                .alias("mask"))
+        .filter(F.col("mask") > 0))
+    return (_span_cut(base, starts, id_col, k, front, attributed=True),
+            occ_plan)
 
 
 def clean_corpus(
@@ -1560,9 +1694,7 @@ def clean_corpus(
     repetition removal applied off ONE shingle pass — the plan a
     100 TB pre-training run actually executes, instead of three
     full-corpus scans each paying its own corpus-sized k-gram
-    exchange (`remove_contaminated_spans` + `remove_dup_spans` +
-    `remove_repeated_spans` chained re-run ``_doc_kgrams`` three
-    times).
+    exchange.
 
     **Composition semantics (defined here, deliberately):** a token
     position is covered iff, ON THE ORIGINAL CORPUS, it lies inside a
@@ -1595,6 +1727,8 @@ def clean_corpus(
     predicate alone (overlapping positions count in each, so
     ``max(cov_*) <= removed_tokens <= cov_benchmark + cov_crossdoc
     + cov_intradoc`` — both laws asserted by the registry query).
+    A null text gives a null ``text_clean`` (null
+    n_tokens/kept_tokens/dup_ratio, every removal count 0).
 
     Scale shape: the positional shingle stream crosses the wire
     EXACTLY ONCE — ``occ = kg.groupBy(doc, dig)`` (doc-local groups:
@@ -1606,124 +1740,17 @@ def clean_corpus(
     map-side-combined counts — a fraction of the positional
     exchange's bytes); benchmark and crossdoc marks merge into ONE
     dig-keyed flags table joined once against occ (AQE-broadcast
-    when small); the intra-doc predicate is positional (idx ≥ 1)
-    inside the same explode — NO exchange at all.  Predicate-hit
-    starts explode ONCE carrying a 3-bit mask (per-predicate tagged
-    streams would re-explode shared windows 2–3× on
-    heavily-duplicated corpora), and the
-    rebuild is the family's shared codegen array arithmetic over a
-    second column-pruned (id, text) scan of the source.  Pass
-    ``return_occ_plan=True`` to also get occ's physical-plan string
-    (captured BEFORE checkpointing) so callers can assert the
-    one-exchange property."""
-    _, kg = _doc_kgrams(docs, text_col, id_col, k)
-    # unsorted collect_list: order inside a group is irrelevant —
-    # the keep-first rule needs only the MINIMUM position, computed
-    # per row before the explode (sort_array paid a per-group sort
-    # inside the object aggregate for nothing)
-    occ = (kg.groupBy(id_col, "dig")
-           .agg(F.collect_list("pos").alias("poss")))
-    occ_plan = None
-    if return_occ_plan:
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            occ.explain(mode="formatted")
-        occ_plan = buf.getvalue()
-    occ = occ.localCheckpoint(eager=True)
-
-    bench_digs = (_doc_kgrams(benchmarks, text_col, id_col, k)[1]
-                  .select("dig").distinct())
-    # one row per (doc, dig) ⇒ count(*) per dig == count_distinct(doc)
-    crossdup_digs = (occ.groupBy("dig")
-                     .agg(F.count(F.lit(1)).alias("nd"))
-                     .filter(F.col("nd") > 1).select("dig"))
-    out = _composed_cut(docs, occ, bench_digs, crossdup_digs,
-                        text_col, id_col, k)
+    when small); the intra-doc predicate is positional inside the
+    same explode — NO exchange at all.  Predicate-hit starts explode
+    ONCE carrying a 3-bit mask, and the rebuild is the family's
+    shared codegen array arithmetic.  Pass ``return_occ_plan=True``
+    to also get occ's physical-plan string (captured BEFORE
+    checkpointing) so callers can assert the one-exchange
+    property."""
+    out, occ_plan = _composed(docs, benchmarks, text_col, id_col, k,
+                              "word", explain_occ=return_occ_plan)
     if return_occ_plan:
         return out, occ_plan
-    return out
-
-
-def _composed_cut(docs, occ, bench_digs, crossdup_digs,
-                  text_col: str, id_col: str, k: int):
-    """Shared back half of the composed corpus build: given the
-    per-(doc, digest) occurrence aggregate and the two predicate
-    digest sets, produce the attributed 9-column cut frame — used by
-    :func:`clean_corpus` (full corpus) and
-    :func:`clean_corpus_batch` (ingest-time, crossdup set includes
-    the persisted corpus index)."""
-    # ONE dig-keyed flags table (benchmark ∪ crossdoc marks), ONE join
-    # against occ, ONE windowed explode carrying a predicate BITMASK —
-    # not three tagged start streams: on heavily-duplicated corpora
-    # the benchmark and crossdoc covers are each ~every position, so
-    # per-predicate streams explode the same windows 2–3× (measured
-    # 2× the SUM of the individual cuts at the 10× replica layout;
-    # the bitmask form explodes each start once)
-    dig_flags = (crossdup_digs.withColumn("c", F.lit(True))
-                 .join(bench_digs.withColumn("b", F.lit(True)),
-                       "dig", "full")
-                 .select("dig", F.coalesce("b", F.lit(False)).alias("b"),
-                         F.coalesce("c", F.lit(False)).alias("c")))
-    hits = (occ.join(dig_flags, "dig", "left")
-            .select(id_col, "poss",
-                    F.array_min("poss").alias("fp"),
-                    F.coalesce("b", F.lit(False)).alias("b"),
-                    F.coalesce("c", F.lit(False)).alias("c"))
-            .filter(F.col("b") | F.col("c")
-                    | (F.size("poss") > 1)))
-    # keep-first rule: a start is an intra-doc repeat iff it is not
-    # the group's MINIMUM position; b/c apply to every occurrence
-    starts = (hits.select(
-        F.col(id_col), F.col("b"), F.col("c"), F.col("fp"),
-        F.explode("poss").alias("pos"))
-        .select(id_col, "pos",
-                (F.when(F.col("b"), 4).otherwise(0)
-                 + F.when(F.col("c"), 2).otherwise(0)
-                 + F.when(F.col("pos") > F.col("fp"), 1).otherwise(0))
-                .alias("mask"))
-        .filter(F.col("mask") > 0))
-    covered = starts.select(
-        F.col(id_col), F.col("mask"),
-        F.explode(F.sequence(
-            F.col("pos"), F.col("pos") + F.lit(k - 1))).alias("p"))
-    cov = (covered.groupBy(id_col)
-           .agg(F.collect_set("p").alias("cov"),
-                F.count_distinct(
-                    F.when(F.col("mask").bitwiseAND(4) > 0,
-                           F.col("p"))).alias("cov_benchmark"),
-                F.count_distinct(
-                    F.when(F.col("mask").bitwiseAND(2) > 0,
-                           F.col("p"))).alias("cov_crossdoc"),
-                F.count_distinct(
-                    F.when(F.col("mask").bitwiseAND(1) > 0,
-                           F.col("p"))).alias("cov_intradoc")))
-    toks = docs.select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("ts"))
-    j = toks.join(cov, id_col, "left")
-    kept_pos = F.array_except(
-        F.sequence(F.lit(1), F.size("ts")),
-        F.coalesce(F.col("cov"), F.array().cast("array<int>")))
-    n_removed = F.coalesce(F.size("cov"), F.lit(0))
-    out = j.select(
-        id_col,
-        F.size("ts").cast("long").alias("n_tokens"),
-        n_removed.cast("long").alias("removed_tokens"),
-        (F.size("ts") - n_removed).cast("long").alias("kept_tokens"),
-        F.round(n_removed / F.size("ts"), 6).alias("dup_ratio"),
-        F.coalesce("cov_benchmark", F.lit(0)).cast("long")
-        .alias("cov_benchmark"),
-        F.coalesce("cov_crossdoc", F.lit(0)).cast("long")
-        .alias("cov_crossdoc"),
-        F.coalesce("cov_intradoc", F.lit(0)).cast("long")
-        .alias("cov_intradoc"),
-        F.array_join(
-            F.transform(kept_pos,
-                        lambda i: F.element_at(F.col("ts"), i)),
-            " ").alias("text_clean"))
     return out
 
 
@@ -1749,65 +1776,15 @@ def clean_corpus_batch(
     the batch (the index records presence of ≥1 corpus doc, and the
     batch occurrence itself supplies the second document), so the
     equivalence is unconditional, not a disjointness assumption.
-    Same 9-column attributed output as :func:`clean_corpus`.
+    Same 9-column attributed output as :func:`clean_corpus`, null
+    texts included.
 
     Scale shape: the batch pays its own (doc, digest) occurrence
     aggregate (batch-sized); the index side is read in place
     (bucketed on dig — plan-assertable); benchmark digests ride the
     shared flags join; the rebuild touches batch docs only."""
-    from legate_dataframe_spark.core.bucketing import read_bucketed
-
-    _, kg = _doc_kgrams(batch, text_col, id_col, k)
-    occ = (kg.groupBy(id_col, "dig")
-           .agg(F.collect_list("pos").alias("poss"))
-           .localCheckpoint(eager=True))
-    idx = read_bucketed(spark, f"{table_prefix}_kgrams").select("dig")
-    bench_digs = (_doc_kgrams(benchmarks, text_col, id_col, k)[1]
-                  .select("dig").distinct())
-    # one-pass gate (same set as the two-branch union it replaces):
-    # cross-doc dup iff ≥2 distinct batch docs share the digest OR it
-    # is in the index — occ is already (doc, dig)-unique, so the
-    # count IS the distinct-doc count
-    counts = occ.groupBy("dig").agg(F.count(F.lit(1)).alias("nd"))
-    crossdup_digs = (counts.join(idx.withColumn("__in_idx", F.lit(1)),
-                                 "dig", "left")
-                     .filter((F.col("nd") > 1)
-                             | F.col("__in_idx").isNotNull())
-                     .select("dig"))
-    return _composed_cut(batch, occ, bench_digs, crossdup_digs,
-                         text_col, id_col, k)
-
-
-def _raw_kgrams(docs, text_col: str, id_col: str, k: int):
-    """(tokens+separators frame, positional k-gram digest stream) for
-    the BYTE-PRESERVING span family: tr/sp from the \\s-stripped
-    ORIGINAL text (separators sit exactly between tokens), digests
-    over lowercased k-gram strings — detection case-insensitive, the
-    rewrite byte-faithful.  Both sides of a raw cut (train and
-    benchmark) must shingle through THIS construction: the
-    normalized family's ``trim()`` is ASCII-space-only, so its token
-    positions can shift by one on leading-tab documents.
-
-    r14: digests via the rolling kernel over xxhash64(lower(token))
-    longs — tokens are ``\\S+`` runs (never contain whitespace), so
-    per-token lowercased equality is exactly the old
-    md5(lower(array_join(slice))) equality class, without the O(k·n)
-    per-position string build + md5."""
-    stripped = (f"regexp_replace({text_col}, "
-                f"'^\\\\s+|\\\\s+$', '')")
-    base = docs.select(
-        F.col(id_col),
-        F.expr(f"regexp_extract_all({stripped}, '\\\\S+', 0)")
-        .alias("tr"),
-        F.expr(f"regexp_extract_all({stripped}, '\\\\s+', 0)")
-        .alias("sp"))
-    kg = _rolled_kgrams(
-        base.select(F.col(id_col),
-                    F.transform("tr",
-                                lambda t: F.xxhash64(F.lower(t)))
-                    .alias("__h")),
-        id_col, k)
-    return base, kg
+    return _composed(batch, benchmarks, text_col, id_col, k, "word",
+                     spark, table_prefix)[0]
 
 
 def clean_corpus_raw(
@@ -1826,90 +1803,16 @@ def clean_corpus_raw(
     is the artifact a production pipeline actually ships — the
     normalized form destroys bytes; Lee et al.'s tool cuts the raw
     text.  Output: the attributed 9-column schema with
-    ``text_clean_raw`` in place of ``text_clean``.
+    ``text_clean_raw`` in place of ``text_clean``.  A null text gives
+    a null ``text_clean_raw`` (null n_tokens/kept_tokens/dup_ratio,
+    every removal count 0).
 
     Same scale shape as :func:`clean_corpus`: one positional
     occurrence exchange (doc-local groups), a dig-keyed flags join,
     one masked cover explode, and a per-doc codegen rebuild — the
     raw rebuild adds only the separator array and the
     glue-to-original-left-separator transform."""
-    base, kg = _raw_kgrams(docs, text_col, id_col, k)
-    occ = (kg.groupBy(id_col, "dig")
-           .agg(F.collect_list("pos").alias("poss"))
-           .localCheckpoint(eager=True))
-    bench_digs = (_raw_kgrams(benchmarks, text_col, id_col, k)[1]
-                  .select("dig").distinct())
-    crossdup_digs = (occ.groupBy("dig")
-                     .agg(F.count(F.lit(1)).alias("nd"))
-                     .filter(F.col("nd") > 1).select("dig"))
-    dig_flags = (crossdup_digs.withColumn("c", F.lit(True))
-                 .join(bench_digs.withColumn("b", F.lit(True)),
-                       "dig", "full")
-                 .select("dig",
-                         F.coalesce("b", F.lit(False)).alias("b"),
-                         F.coalesce("c", F.lit(False)).alias("c")))
-    hits = (occ.join(dig_flags, "dig", "left")
-            .select(id_col, "poss",
-                    F.array_min("poss").alias("fp"),
-                    F.coalesce("b", F.lit(False)).alias("b"),
-                    F.coalesce("c", F.lit(False)).alias("c"))
-            .filter(F.col("b") | F.col("c")
-                    | (F.size("poss") > 1)))
-    starts = (hits.select(
-        F.col(id_col), F.col("b"), F.col("c"), F.col("fp"),
-        F.explode("poss").alias("pos"))
-        .select(id_col, "pos",
-                (F.when(F.col("b"), 4).otherwise(0)
-                 + F.when(F.col("c"), 2).otherwise(0)
-                 + F.when(F.col("pos") > F.col("fp"), 1)
-                 .otherwise(0)).alias("mask"))
-        .filter(F.col("mask") > 0))
-    covered = starts.select(
-        F.col(id_col), F.col("mask"),
-        F.explode(F.sequence(
-            F.col("pos"), F.col("pos") + F.lit(k - 1))).alias("p"))
-    cov = (covered.groupBy(id_col)
-           .agg(F.collect_set("p").alias("cov"),
-                F.count_distinct(
-                    F.when(F.col("mask").bitwiseAND(4) > 0,
-                           F.col("p"))).alias("cov_benchmark"),
-                F.count_distinct(
-                    F.when(F.col("mask").bitwiseAND(2) > 0,
-                           F.col("p"))).alias("cov_crossdoc"),
-                F.count_distinct(
-                    F.when(F.col("mask").bitwiseAND(1) > 0,
-                           F.col("p"))).alias("cov_intradoc")))
-    j = base.join(cov, id_col, "left")
-    n = F.size("tr")
-    kept_pos = F.array_except(
-        F.when(n >= 1, F.sequence(F.lit(1), n))
-        .otherwise(F.array().cast("array<int>")),
-        F.coalesce(F.col("cov"), F.array().cast("array<int>")))
-    # the byte-preserving rebuild (remove_dup_spans_raw): a kept
-    # token glues to its ORIGINAL left separator when its left
-    # neighbor was also kept, else to one space
-    piece = F.transform(
-        kept_pos,
-        lambda i, idx: F.when(idx == 0, F.get(F.col("tr"), i - 1))
-        .when(F.get(kept_pos, idx - 1) == i - 1,
-              F.concat(F.get(F.col("sp"), i - 2),
-                       F.get(F.col("tr"), i - 1)))
-        .otherwise(F.concat(F.lit(" "), F.get(F.col("tr"), i - 1))))
-    n_removed = F.coalesce(F.size("cov"), F.lit(0))
-    return j.select(
-        id_col,
-        n.cast("long").alias("n_tokens"),
-        n_removed.cast("long").alias("removed_tokens"),
-        (n - n_removed).cast("long").alias("kept_tokens"),
-        F.when(n == 0, F.lit(0.0))
-        .otherwise(F.round(n_removed / n, 6)).alias("dup_ratio"),
-        F.coalesce("cov_benchmark", F.lit(0)).cast("long")
-        .alias("cov_benchmark"),
-        F.coalesce("cov_crossdoc", F.lit(0)).cast("long")
-        .alias("cov_crossdoc"),
-        F.coalesce("cov_intradoc", F.lit(0)).cast("long")
-        .alias("cov_intradoc"),
-        F.array_join(piece, "").alias("text_clean_raw"))
+    return _composed(docs, benchmarks, text_col, id_col, k, "raw")[0]
 
 
 def remove_dup_spans_chars(
@@ -1931,108 +1834,21 @@ def remove_dup_spans_chars(
     document, and ``text_clean_chars`` is the original text minus
     the covered characters.  ``k`` is the minimum cut length in
     characters (Lee et al. use 50 BPE tokens; 20–50 chars is the
-    comparable band).
-
-    This completes the span family's tokenizer CONTRACT: a span
-    operator = (position stream, k-gram digest per position, rebuild
-    by kept positions).  The word variants instantiate it with the
-    ``\\s+`` tokenizer; this one with the identity (per-character)
-    tokenizer; a BPE instantiation would slot into the same three
-    stages.
+    comparable band).  A null text gives a null ``text_clean_chars``
+    (null n_chars/kept_chars/dup_ratio, nothing removed).
 
     Scale shape: identical to the word form's front — ONE
     corpus-sized k-gram digest groupBy (map-side combined; ~wordlen×
     more shingle rows than the word form, the price of tokenizer
     independence) — but the rebuild is INTERVAL-based (VERDICT r12
-    task 4): duplicated window STARTS merge into covered intervals
-    per document (an islands window over dup-mass-sized rows — no ×k
-    position explode at all), and the cleaned text is the
-    concatenation of ``substring`` slices of the KEPT gaps between
-    them.  Per-row state is O(intervals), not O(chars): a 5 MB
-    document with three duplicated runs carries three structs, where
-    the per-char form materialized a 5-million-int position array
-    and transformed it element-wise (``scripts/probe_char_rebuild``
-    records the measured gap).  Characters never shuffle."""
-    base = docs.select(F.col(id_col), F.col(text_col).alias("__t"),
-                       F.length(F.col(text_col)).alias("__n"))
-    # The digest is an internal equality proxy (each side of the
-    # oracle comparison hashes independently), so the FUNCTION is free
-    # to change as long as it is deterministic and collision-free at
-    # corpus scale.  r14: the per-position slice hashing (split('') to
-    # a per-char string array + xxhash64 over a k-char slice per
-    # position — O(k·n) with n = CHARACTERS, the span family's most
-    # expensive digest build) is replaced by an O(n) rolling
-    # polynomial window over splitmix64-mixed codepoints in vectorized
-    # numpy via mapInArrow (guide §4.2) — see _rolling_char_digest_fn.
-    # The per-char string array is never built at all.
-    id_field = base.schema[id_col]
-    out_type = T.StructType([
-        id_field,
-        T.StructField("__digs", T.ArrayType(T.LongType(), False), True),
-    ])
-    digs = (base.filter(F.col("__n") >= k).select(id_col, "__t")
-            .mapInArrow(_rolling_char_digest_fn(k, id_field.name),
-                        out_type))
-    kg = (digs.select(id_col, F.posexplode("__digs").alias("off", "dig"))
-          .select(id_col, (F.col("off") + 1).alias("pos"), "dig"))
-    # kg feeds TWO branches (the dup-digest aggregate and the covered
-    # semi-join) and Spark has no cross-branch CSE — without a
-    # materialization the per-CHARACTER slice hashing (the family's
-    # most expensive digest front: ~wordlen× more shingles than the
-    # word form, O(k) per position) runs twice.  Same
-    # write-once/read-twice trade the word/raw/BPE cuts make.
-    kg = kg.localCheckpoint(eager=True)
-    dup = (kg.groupBy("dig")
-           .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-           .filter(F.col("nd") > 1).select("dig"))
-    from pyspark.sql import Window
-
-    # duplicated window STARTS (each covers [pos, pos+k-1]); merge
-    # touching/overlapping windows into islands — positions are
-    # unique per (doc, pos) by construction, so no distinct needed
-    starts_cov = (kg.join(dup, "dig", "left_semi")
-                  .select(id_col, "pos",
-                          (F.col("pos") + F.lit(k - 1)).alias("end")))
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_end = F.max("end").over(
-        w.rowsBetween(Window.unboundedPreceding, -1))
-    iv = (starts_cov
-          .withColumn("new_grp",
-                      F.when(prev_end.isNull()
-                             | (F.col("pos") > prev_end + 1), 1)
-                      .otherwise(0))
-          .withColumn("grp", F.sum("new_grp").over(
-              w.rowsBetween(Window.unboundedPreceding, 0)))
-          .groupBy(id_col, "grp")
-          .agg(F.min("pos").alias("s"), F.max("end").alias("e"))
-          .groupBy(id_col)
-          .agg(F.sort_array(F.collect_list(F.struct("s", "e")))
-               .alias("iv")))
-    j = base.join(iv, id_col, "left")
-    ivs = F.coalesce(
-        F.col("iv"), F.array().cast("array<struct<s:int,e:int>>"))
-    n_removed = F.coalesce(
-        F.aggregate(ivs, F.lit(0),
-                    lambda a, x: a + x["e"] - x["s"] + 1), F.lit(0))
-    # kept gaps: starts = 1 ∪ (each island's e+1); ends = (each
-    # island's s-1) ∪ n — zip to substring slices, empty when b < a
-    gap_starts = F.concat(F.array(F.lit(1)),
-                          F.transform(ivs, lambda x: x["e"] + 1))
-    gap_ends = F.concat(F.transform(ivs, lambda x: x["s"] - 1),
-                        F.array(F.col("__n")))
-    pieces = F.zip_with(
-        gap_starts, gap_ends,
-        lambda a, b: F.when(b >= a, F.col("__t").substr(a, b - a + 1))
-        .otherwise(F.lit("")))
-    return j.select(
-        id_col,
-        F.col("__n").cast("long").alias("n_chars"),
-        n_removed.cast("long").alias("removed_chars"),
-        (F.col("__n") - n_removed).cast("long").alias("kept_chars"),
-        F.when(F.col("__n") == 0, F.lit(0.0))
-        .otherwise(F.round(n_removed / F.col("__n"), 6))
-        .alias("dup_ratio"),
-        F.array_join(pieces, "").alias("text_clean_chars"))
+    task 4, see :func:`_span_cut`): a 5 MB document with three
+    duplicated runs carries three structs, where a per-char form
+    would materialize a 5-million-int position array and transform it
+    element-wise (OPTIMIZATION_r13.md records the measured gap).
+    Characters never shuffle."""
+    base, kg = _doc_kgrams(docs, text_col, id_col, k, "char")
+    return _span_cut(base, _crossdoc_starts(kg, id_col), id_col, k,
+                     "char")
 
 
 def dup_span_intervals(
@@ -2058,14 +1874,7 @@ def dup_span_intervals(
     from pyspark.sql import Window
 
     _, kg = _doc_kgrams(docs, text_col, id_col, k)
-    # kg feeds both the dup aggregate and the covered semi-join; no
-    # cross-branch CSE in Spark, so materialize the corpus-sized
-    # digest stream once (the word/raw/BPE cuts' trade).
-    kg = kg.localCheckpoint(eager=True)
-    dup = (kg.groupBy("dig")
-           .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-           .filter(F.col("nd") > 1).select("dig"))
-    covered = _covered_positions(kg, dup, id_col, k)
+    covered = _cover(_crossdoc_starts(kg, id_col), id_col, k)
     w = Window.partitionBy(id_col).orderBy("pos")
     return (covered
             .withColumn("grp", F.col("pos") - F.row_number().over(w))
@@ -2092,28 +1901,15 @@ def batch_remove_dup_spans(
     exists in the index (some corpus document carries it) or ≥2
     distinct batch documents share it; for a corpus-disjoint batch
     the output is IDENTICAL to the full recompute restricted to the
-    batch — the equivalence the driver oracle checks.
+    batch — the equivalence the driver oracle checks.  Null texts
+    behave as in :func:`remove_dup_spans`.
 
     Scale shape: the index side is read in place (bucketed on dig);
     only the batch's digests shuffle; only touched batch docs pay the
     rebuild."""
-    from legate_dataframe_spark.core.bucketing import read_bucketed
-
-    _, kg = _doc_kgrams(batch, text_col, id_col, k)
-    # one-pass gate: dup iff ≥2 distinct batch docs share the digest
-    # OR it is in the index — a left join against the bucketed index
-    # replaces the old two-branch union (same set, and kg now feeds
-    # two plans instead of three; no eager checkpoint here — a
-    # per-trigger materialization barrier costs more than the spared
-    # batch-sized digest re-evaluation in the streaming chains).
-    idx = read_bucketed(spark, f"{table_prefix}_kgrams").select("dig")
-    counts = (kg.select("dig", id_col).distinct()
-              .groupBy("dig").agg(F.count(F.lit(1)).alias("nd")))
-    dup = (counts.join(idx.withColumn("__in_idx", F.lit(1)),
-                       "dig", "left")
-           .filter((F.col("nd") > 1) | F.col("__in_idx").isNotNull())
-           .select("dig"))
-    return _span_removal(batch, kg, dup, text_col, id_col, k)
+    base, kg = _doc_kgrams(batch, text_col, id_col, k)
+    return _span_cut(base, _gated_starts(spark, kg, table_prefix, id_col),
+                     id_col, k)
 
 
 def build_substring_index(
@@ -2141,10 +1937,8 @@ def build_substring_index(
     from legate_dataframe_spark.core.bucketing import init_versioned
 
     _, kg = _doc_kgrams(corpus, text_col, id_col, k)
-    counts = (kg.select("dig", id_col).distinct()
-              .groupBy("dig")
-              .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-    init_versioned(spark, counts, f"{table_prefix}_kgrams", ["dig"],
+    init_versioned(spark, _doc_counts(kg, id_col, "n_docs"),
+                   f"{table_prefix}_kgrams", ["dig"],
                    num_buckets=num_buckets)
 
 
@@ -2169,20 +1963,9 @@ def batch_substring_spans(
     Scale shape: the index side is read in place (bucketed on dig —
     the semi-join plans Exchange-free on the state side); only the
     batch's digest stream shuffles; the corpus is never rescanned."""
-    from legate_dataframe_spark.core.bucketing import read_bucketed
-
     base, kg = _doc_kgrams(batch, text_col, id_col, k)
-    # same one-pass gate as batch_remove_dup_spans (dup iff nd>1 OR
-    # in the index — identical set, one less kg evaluation, no
-    # per-trigger checkpoint barrier)
-    idx = read_bucketed(spark, f"{table_prefix}_kgrams").select("dig")
-    counts = (kg.select("dig", id_col).distinct()
-              .groupBy("dig").agg(F.count(F.lit(1)).alias("nd")))
-    dup = (counts.join(idx.withColumn("__in_idx", F.lit(1)),
-                       "dig", "left")
-           .filter((F.col("nd") > 1) | F.col("__in_idx").isNotNull())
-           .select("dig"))
-    return _span_coverage(base, kg, dup, id_col, k)
+    return _span_coverage(base, _gated_starts(spark, kg, table_prefix,
+                                              id_col), id_col, k)
 
 
 def insert_into_substring_index(
@@ -2206,10 +1989,7 @@ def insert_into_substring_index(
     )
 
     _, kg = _doc_kgrams(batch, text_col, id_col, k)
-    b = (kg.select("dig", id_col).distinct()
-         .groupBy("dig")
-         .agg(F.count(F.lit(1)).cast("long").alias("b_docs"))
-         .localCheckpoint(eager=True))
+    b = _doc_counts(kg, id_col, "b_docs").localCheckpoint(eager=True)
     name = f"{table_prefix}_kgrams"
     idx = read_bucketed(spark, name)
     merged = (idx.join(b, "dig", "left")
@@ -2245,9 +2025,8 @@ def append_substring_delta(
     from legate_dataframe_spark.core.bucketing import append_versioned
 
     _, kg = _doc_kgrams(batch, text_col, id_col, k)
-    delta = (kg.select("dig", id_col).distinct()
-             .groupBy("dig")
-             .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-    append_versioned(spark, delta.repartition(num_buckets, "dig"),
+    append_versioned(spark,
+                     _doc_counts(kg, id_col, "n_docs")
+                     .repartition(num_buckets, "dig"),
                      f"{table_prefix}_kgrams", ["dig"],
                      num_buckets=num_buckets)

@@ -68,12 +68,11 @@ _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "clean_corpus_raw_onepass": (
         r13.clean_corpus_raw_onepass,
         r13.CLEAN_CORPUS_RAW_ONEPASS_SQL),
-    # ---- changed this round — re-verify (the span family's shared
-    # _doc_kgrams front now carries the token array and dispatches
-    # large k to slice-hash digests; the char form gained the linear
-    # shingle front + interval rebuild; decontaminate/repeated cuts
-    # iterate to a fixpoint; takedown staging moved inside the export
-    # dir and keeps null-id rows) ----
+    # ---- changed in r13 — re-verify (the span family's shared
+    # _doc_kgrams front; since r14 one rolling-digest builder serves
+    # every front and every k; the char form has the interval rebuild;
+    # decontaminate/repeated cuts iterate to a fixpoint; takedown
+    # staging moved inside the export dir and keeps null-id rows) ----
     "substring_span_removal_chars": (
         r12.substring_span_removal_chars,
         r12.SUBSTRING_SPAN_REMOVAL_CHARS_SQL),

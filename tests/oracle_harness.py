@@ -78,9 +78,17 @@ def compare(spark_df: pd.DataFrame, oracle_df: pd.DataFrame,
     return issues
 
 
-def run_one(spark, con, name: str, sf_dir: str):
+def run_one(spark, con, name: str, sf_dir: str, plans=None):
+    """Run registry entry ``name`` and its DuckDB oracle and compare
+    them.  With a ``plans`` dict, the simple-mode physical plan of the
+    built frame (before it runs) is stored in it under ``name``."""
     from legate_dataframe_spark.plans.registry import ORACLES, QUERIES
 
-    sdf = QUERIES[name](spark, sf_dir).toPandas()
+    df = QUERIES[name](spark, sf_dir)
+    if plans is not None:
+        from tests.test_plan_quality import plan_of
+
+        plans[name] = plan_of(df, "simple")
+    sdf = df.toPandas()
     odf = con.execute(ORACLES[name]).fetchdf()
     return compare(sdf, odf), sdf, odf

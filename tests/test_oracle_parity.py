@@ -17,8 +17,8 @@ def con(sf_dir):
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, con, sf_dir, name):
-    issues, sdf, odf = run_one(spark, con, name, sf_dir)
+def test_query_matches_oracle(spark, con, sf_dir, name, registry_plans):
+    issues, sdf, odf = run_one(spark, con, name, sf_dir, registry_plans)
     assert not issues, f"{name}: {issues}"
 
 

@@ -128,7 +128,7 @@ def test_quantile_stats_partial_agg(spark, sf_dir):
     assert "partial_percentile" in plan
 
 
-def test_no_cartesian_anywhere(spark, sf_dir):
+def test_no_cartesian_anywhere(spark, sf_dir, registry_plans):
     # registry-wide hygiene: a CartesianProduct anywhere is quadratic
     # at scale; BroadcastNestedLoopJoin only where a side is tiny BY
     # CONSTRUCTION (1-row scalar subqueries; deliberate broadcast-small
@@ -179,7 +179,8 @@ def test_no_cartesian_anywhere(spark, sf_dir):
     }
     offenders = {}
     for name, fn in sorted(QUERIES.items()):
-        plan = plan_of(fn(spark, sf_dir), "simple")
+        plan = registry_plans.get(name) or plan_of(fn(spark, sf_dir),
+                                                   "simple")
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in bnlj_ok:

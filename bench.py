@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line with per-query wall times.
+two JSON lines: the extras' per-query wall times, then the compact
+headline object as the FINAL line.  ``--all`` instead times every
+registry entry once (the coverage ledger, ``run_all``).
 
 Queries are forced to full materialization with the noop sink (no
 result collection to the driver, no output IO) so the measured time is
@@ -16,6 +18,7 @@ import os
 import sys
 import time
 
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -266,132 +269,18 @@ def contention_sentinel(reps: int = 3) -> float:
     return round(best, 4)
 
 
-# DURING-WINDOW interference sampler (r13: the point-sample sentinel
-# is blind to bursty interference — the r13 freeze evening showed
-# 0.12–0.13 "quiet" edge sentinels bracketing windows with 1.5–13×
-# inflation on unchanged queries).  A timing probe cannot run WHILE
-# the suite executes (our own 32-core stages starve it), so the
-# during-window signal is hypervisor STEAL time from /proc/stat:
-# cycles the host took from this VM for other tenants — exactly the
-# foreign load that inflates queries, zero contribution from our own
-# work, and ~free to sample.  The child writes (wall_ts,
-# steal_ticks_cumulative) every 2 s and exits on its own when the
-# parent dies (ppid check).
-_SENTINEL_CHILD_SRC = r"""
-import os, sys, time
-ppid = os.getppid()
-out = open(sys.argv[1], "a", buffering=1)
-while os.getppid() == ppid:
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        steal = int(parts[8]) if len(parts) > 8 else 0
-    except Exception:
-        steal = -1
-    out.write("%.3f %d\n" % (time.time(), steal))
-    time.sleep(2.0)
-"""
-
-
-class SentinelSampler:
-    """Background subprocess sampling hypervisor steal ACROSS timed
-    windows (not just at their edges).  ``stats(t0, t1)`` grades any
-    wall-clock window after the fact: per-2s-interval steal in cores,
-    its mean/p95/max, and the fraction of intervals whose implied
-    slowdown ncpu/(ncpu−steal) exceeds CONTENDED_FACTOR."""
-
-    def __init__(self) -> None:
-        import subprocess
-        import tempfile
-
-        fd, self.path = tempfile.mkstemp(prefix="bench_sentinel_",
-                                         suffix=".log")
-        os.close(fd)
-        self.hz = os.sysconf("SC_CLK_TCK")
-        self.ncpu = os.cpu_count() or 1
-        self.proc = subprocess.Popen(
-            [sys.executable, "-c", _SENTINEL_CHILD_SRC, self.path],
-            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
-
-    def stop(self) -> None:
-        try:
-            self.proc.terminate()
-            self.proc.wait(timeout=10)
-        except Exception:
-            pass
-        try:
-            os.unlink(self.path)
-        except OSError:
-            pass
-
-    def _samples(self) -> list[tuple[float, int]]:
-        out = []
-        try:
-            with open(self.path) as fh:
-                for line in fh:
-                    parts = line.split()
-                    if len(parts) == 2:
-                        try:
-                            out.append((float(parts[0]), int(parts[1])))
-                        except ValueError:
-                            pass
-        except OSError:
-            pass
-        return out
-
-    def stats(self, t0: float, t1: float) -> dict | None:
-        pts = [(t, s) for t, s in self._samples()
-               if t0 <= t <= t1 and s >= 0]
-        if len(pts) < 2:
-            return None
-        cores = []
-        for (ta, sa), (tb, sb) in zip(pts, pts[1:]):
-            dt = tb - ta
-            if dt > 0:
-                cores.append((sb - sa) / self.hz / dt)
-        if not cores:
-            return None
-        cores.sort()
-        n = len(cores)
-        # steal of S cores slows a box-wide stage by ncpu/(ncpu-S);
-        # an interval is "contended" when that factor crosses the
-        # same CONTENDED_FACTOR the point sentinel uses
-        s_thresh = self.ncpu * (1.0 - 1.0 / CONTENDED_FACTOR)
-        return {
-            "n": n,
-            "mean_steal_cores": round(sum(cores) / n, 2),
-            "p95_steal_cores": round(cores[min(n - 1, int(0.95 * n))], 2),
-            "max_steal_cores": round(cores[-1], 2),
-            "frac_contended": round(
-                sum(1 for c in cores if c > s_thresh) / n, 3),
-        }
-
-
-def _during_contended(stats: dict | None) -> bool:
-    """A window counts as contended when its MEAN steal implies a
-    ≥CONTENDED_FACTOR slowdown, or more than a quarter of its
-    intervals do individually — bursty interference shows up here
-    even when the edge sentinels read quiet."""
-    if not stats:
-        return False
-    ncpu = os.cpu_count() or 1
-    s_thresh = ncpu * (1.0 - 1.0 / CONTENDED_FACTOR)
-    return (stats["mean_steal_cores"] > s_thresh
-            or stats["frac_contended"] > 0.25)
-
-
 class SentinelSeries:
-    """Between-query point-sentinel series (r13): steal accounting
-    only sees the DESCHEDULING class of interference — the first r13
-    freeze attempt hit a host state where a single-thread loop ran
-    2.7× slow on an otherwise idle guest with steal near zero
-    (host-level core sharing / throttling charges no steal).  The
-    only guest-visible signal for that class is the timing probe
-    itself, and between queries (after the noop action returns and
-    caches release) Spark is idle, so a single-rep probe there is
-    starved by nothing of ours.  ~0.14 s per sample on a quiet box,
-    taken OUTSIDE every timed region — per-query timings are
-    untouched."""
+    """Between-query probe series, the ONE contention signal: a
+    single-rep ``contention_sentinel`` taken after every timed query,
+    when the noop action has returned and caches are released, so
+    Spark is idle and starves the probe of nothing (~0.14 s a sample
+    on a quiet box, outside every timed region).  It sees both
+    classes of interference: vCPU descheduling and host-level slow
+    epochs, where a single-thread loop ran 2.7× slow on an idle guest
+    with near-zero steal.  Replayed over the 11 committed records that
+    also carried a steal sampler and edge probes, this series alone
+    reproduces every ``contended`` tag (tests/test_bench_contention.py);
+    the other two never decided a tag on their own."""
 
     def __init__(self) -> None:
         self.samples: list[tuple[float, float]] = []
@@ -416,11 +305,35 @@ class SentinelSeries:
 
 
 def _series_contended(stats: dict | None) -> bool:
-    """More than a quarter of the between-query probes above the
-    contended threshold = the window spent real time degraded, even
-    if the edges read quiet (single probes are noisier than the
-    min-of-3 edge sentinel, so one hot sample must not tag a run)."""
+    """More than a quarter of the window's probes above the contended
+    threshold = the window spent real time degraded.  A single probe
+    is noisy, so one hot sample must not tag a run; an empty window
+    never does."""
     return bool(stats) and stats["frac_contended"] > 0.25
+
+
+def _env_int(var: str, default: int) -> int:
+    """``max(1, int($var))``, ``default`` when unset; a value that is
+    not an integer stops the run instead of being silently replaced."""
+    try:
+        return max(1, int(os.environ.get(var, str(default))))
+    except ValueError as e:
+        raise SystemExit(f"{var} must be an integer: {e}")
+
+
+def time_query(spark, name: str, sf_dir: str) -> float:
+    """Seconds for one run of registry query ``name`` forced through
+    the noop sink.  The registry's cache-release preamble is bypassed
+    (``__wrapped__``): within a query's best-of-N, repeats may reuse
+    persisted subtrees (Spark's CacheManager matches canonicalized
+    plans), matching the r01 baseline methodology.  Callers choose
+    where ``release_caches()`` runs."""
+    from legate_dataframe_spark.plans.registry import QUERIES
+
+    fn = QUERIES[name].__wrapped__
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
 
 
 def _run_tags() -> dict:
@@ -436,16 +349,15 @@ def _run_tags() -> dict:
     import re as _re
     import subprocess
 
-    here = os.path.dirname(os.path.abspath(__file__))
     rnd = os.environ.get("SPARK_GRAFT_ROUND")
     if rnd is None:
         seen = [int(m.group(1)) for p in _glob.glob(
-            os.path.join(here, "BENCH_r*.json"))
+            os.path.join(HERE, "BENCH_r*.json"))
             if (m := _re.search(r"BENCH_r(\d+)\.json$", p))]
         rnd = str(max(seen, default=0) + 1)
     try:
         commit = subprocess.run(
-            ["git", "-C", here, "rev-parse", "--short", "HEAD"],
+            ["git", "-C", HERE, "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True, timeout=10,
         ).stdout.strip() or None
     except Exception:
@@ -499,12 +411,12 @@ def join_throughput_gibs(spark, nrows: int = 1 << 24, nruns: int = 3) -> float:
     return round(nbytes / min(times) / 2**30, 3)
 
 
-def _last_quiet_ledger(here: str) -> dict | None:
+def _last_quiet_ledger() -> dict | None:
     """Most recent NON-contended full-ledger row in the committed
     history — what a contended ledger freeze must point at as its
     diff base (VERDICT r11 task 1: refuse-and-retag needs a
     companion, or a round ships with no usable base)."""
-    hist = os.path.join(here, "BENCH_EXTRAS_HISTORY.jsonl")
+    hist = os.path.join(HERE, "BENCH_EXTRAS_HISTORY.jsonl")
     best = None
     try:
         with open(hist) as fh:
@@ -524,6 +436,25 @@ def _last_quiet_ledger(here: str) -> dict | None:
             ("round", "commit", "ts_utc", "sentinel_sec")}
 
 
+def _start(app_name: str):
+    """(spark, sf_dir, sf, cpus) for a run configured by
+    $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS; ``sf`` is the scale
+    factor parsed from the directory name (the raw suffix when it is
+    not a number)."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf: float | str = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        sf = float(sf)
+    except ValueError:
+        pass
+    sys.path.insert(0, HERE)
+    from legate_dataframe_spark.session import get_session
+
+    spark = get_session(app_name=app_name, master=f"local[{cpus}]")
+    return spark, sf_dir, sf, cpus
+
+
 def run_all() -> None:
     """Coverage ledger (VERDICT r07 task 7): time EVERY registry entry
     once — single run, no warm-up amortization, no best-of-N — so no
@@ -531,40 +462,27 @@ def run_all() -> None:
     benchmark: one run under host noise bounds the cost to within
     ~2×, which is enough to spot a pathological operator.
 
-    Contention refusal (VERDICT r11 task 1): a pass whose sentinel
-    lands above the quiet band RE-RUNS (up to
-    $SPARK_GRAFT_LEDGER_ATTEMPTS, default 3), keeping the first
-    quiet pass; if every attempt is contended the record tags
-    itself AND carries the last quiet ledger forward explicitly
-    (``diff_base``), so cross-round diffs always have a usable base
-    by construction, not by the reader's archaeology.  Output:
-    BENCH_ALL.json (committed) + a line in BENCH_EXTRAS_HISTORY.jsonl."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    Contention refusal (VERDICT r11 task 1): a pass whose probe series
+    reads contended RE-RUNS (up to $SPARK_GRAFT_LEDGER_ATTEMPTS,
+    default 3), keeping the first quiet pass; if every attempt is
+    contended the record tags itself AND carries the last quiet ledger
+    forward explicitly (``diff_base``), so cross-round diffs always
+    have a usable base by construction, not by the reader's
+    archaeology.  Output: BENCH_ALL.json (committed) + a line in
+    BENCH_EXTRAS_HISTORY.jsonl."""
+    attempts = _env_int("SPARK_GRAFT_LEDGER_ATTEMPTS", 3)
+    spark, sf_dir, sf, _ = _start("ldf-bench-all")
     from legate_dataframe_spark.core.caching import release_caches
     from legate_dataframe_spark.plans.registry import QUERIES
-    from legate_dataframe_spark.session import get_session
 
-    spark = get_session(app_name="ldf-bench-all",
-                        master=f"local[{cpus}]")
-    here = os.path.dirname(os.path.abspath(__file__))
-    out_path = os.path.join(here, "BENCH_ALL.json")
-
-    sampler = SentinelSampler()
     series = SentinelSeries()
 
-    def ledger_pass() -> tuple[dict[str, float], float,
-                               dict | None, dict | None]:
+    def ledger_pass() -> tuple[dict[str, float], dict | None]:
         t_start = time.time()
         times: dict[str, float] = {}
         for i, name in enumerate(sorted(QUERIES)):
-            t0 = time.perf_counter()
             try:
-                (QUERIES[name](spark, sf_dir)
-                 .write.format("noop").mode("overwrite").save())
-                times[name] = round(time.perf_counter() - t0, 3)
+                times[name] = round(time_query(spark, name, sf_dir), 3)
             except Exception as e:  # record, don't abort the ledger
                 times[name] = -1.0
                 print(f"ERR {name}: {type(e).__name__}: {e}",
@@ -573,122 +491,69 @@ def run_all() -> None:
             series.take()
             print(f"[{i + 1}/{len(QUERIES)}] {name} {times[name]}",
                   file=sys.stderr, flush=True)
-        t_end = time.time()
-        return (times, contention_sentinel(),
-                sampler.stats(t_start, t_end),
-                series.stats(t_start, t_end))
+        return times, series.stats(t_start, time.time())
 
-    try:
-        attempts = max(1, int(os.environ.get(
-            "SPARK_GRAFT_LEDGER_ATTEMPTS", "3")))
-    except ValueError:
-        attempts = 3
     attempt_sentinels: list[float] = []
-    times: dict[str, float] = {}
-    ledger_sentinel = float("inf")
-    during: dict | None = None
-    ser: dict | None = None
     for attempt in range(attempts):
-        times, ledger_sentinel, during, ser = ledger_pass()
-        attempt_sentinels.append(ledger_sentinel)
-        # the edge sentinel is blind to interference INSIDE the pass
-        # (r13: 0.12–0.13 edge readings bracketing 1.5–13× inflated
-        # windows); a pass only counts as quiet when the edges, the
-        # steal window AND the between-query probe series agree
-        if (ledger_sentinel <= CONTENDED_FACTOR * QUIET_SENTINEL_SEC
-                and not _during_contended(during)
-                and not _series_contended(ser)):
+        times, ser = ledger_pass()
+        attempt_sentinels.append(contention_sentinel())
+        contended = _series_contended(ser)
+        if not contended:
             break
         print(f"ledger pass {attempt + 1}/{attempts} contended "
-              f"(sentinel {ledger_sentinel}, steal {during}, "
-              f"series {ser}); "
+              f"(series {ser}); "
               + ("re-running" if attempt + 1 < attempts
                  else "giving up — tagging and carrying the last "
                       "quiet ledger forward"),
               file=sys.stderr, flush=True)
-    sampler.stop()
-    try:
-        sf_num: float | str = float(sf)
-    except ValueError:
-        sf_num = sf
-    contended = (ledger_sentinel
-                 > CONTENDED_FACTOR * QUIET_SENTINEL_SEC
-                 or _during_contended(during)
-                 or _series_contended(ser))
     record = {"metric": "all_queries_seconds_single_run", "unit": "sec",
-              "sf": sf_num, "queries": times,
-              "sentinel_sec": ledger_sentinel,
+              "sf": sf, "queries": times,
+              "sentinel_sec": attempt_sentinels[-1],
               "sentinel_quiet_nominal": QUIET_SENTINEL_SEC,
-              "sentinel_during": during,
               "sentinel_series": ser,
               "attempt_sentinels": attempt_sentinels,
               "registry_count": len(QUERIES),
               "contended": contended,
               **_run_tags()}
     if contended:
-        record["diff_base"] = _last_quiet_ledger(here)
-    with open(out_path, "w") as fh:
+        record["diff_base"] = _last_quiet_ledger()
+    with open(os.path.join(HERE, "BENCH_ALL.json"), "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    with open(os.path.join(here, "BENCH_EXTRAS_HISTORY.jsonl"),
+    with open(os.path.join(HERE, "BENCH_EXTRAS_HISTORY.jsonl"),
               "a") as fh:
         fh.write(json.dumps(record, sort_keys=True) + "\n")
     print(json.dumps(record))
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_num = float(sf)
-    except ValueError:
-        sf_num = None
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from legate_dataframe_spark.session import get_session
-    from legate_dataframe_spark.plans.registry import QUERIES
-
-    spark = get_session(app_name="ldf-bench", master=f"local[{cpus}]")
-
-    from legate_dataframe_spark.core.caching import release_caches
-
-    def run(name: str) -> float:
-        # bypass the registry's cache-release preamble: within one
-        # query's best-of-3, repeats may reuse persisted subtrees
-        # (Spark's CacheManager matches canonicalized plans), matching
-        # the r01 baseline methodology; release_caches() runs between
-        # QUERIES so nothing accumulates across the suite
-        fn = getattr(QUERIES[name], "__wrapped__", QUERIES[name])
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # warm up the JVM / parquet readers / codegen on the smallest query
-    run("sort_topk")
-
-    # during-window sentinels (r13): steal sampling catches vCPU
-    # descheduling; the between-query probe series catches host-level
-    # execution-speed degradation steal cannot see — both graded per
-    # window, neither perturbs any timed region
-    sampler = SentinelSampler()
-    series = SentinelSeries()
-    t_head0 = time.time()
-
     # best-of-3: the box is multi-tenant with multi-second contention
     # bursts (observed 10× swings on trivial queries); min isolates
     # intrinsic cost.  SPARK_GRAFT_BENCH_RUNS overrides for long scale
     # probes (10× data × best-of-3 × a growing extras list won't fit a
     # bounded window at runs=3).
-    try:
-        nruns = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    except ValueError as e:
-        raise SystemExit(f"SPARK_GRAFT_BENCH_RUNS must be an integer: {e}")
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        times[name] = round(min(run(name) for _ in range(nruns)), 3)
-        release_caches()
-        series.take()
+    nruns = _env_int("SPARK_GRAFT_BENCH_RUNS", 3)
+    spark, sf_dir, sf, cpus = _start("ldf-bench")
+    from legate_dataframe_spark.core.caching import release_caches
+
+    # warm up the JVM / parquet readers / codegen on the smallest query
+    time_query(spark, "sort_topk", sf_dir)
+
+    series = SentinelSeries()
+
+    def suite(names: list[str], runs: int) -> dict[str, float]:
+        # release_caches() runs between QUERIES so nothing accumulates
+        # across the suite; the probe sample lands outside every timing
+        out = {}
+        for name in names:
+            out[name] = round(min(time_query(spark, name, sf_dir)
+                                  for _ in range(runs)), 3)
+            release_caches()
+            series.take()
+        return out
+
+    t_head0 = time.time()
+    times = suite(HEADLINE, nruns)
 
     # contention hygiene (VERDICT r10 task 6): if the box was
     # contended during the headline pass, auto-rerun the headline
@@ -696,33 +561,20 @@ def main() -> None:
     # rows; a still-contended rerun changes nothing and the snapshot
     # gets TAGGED so cross-round diffs exclude it by code, not by
     # hand)
-    sentinel_mid = contention_sentinel()
-    head_during = sampler.stats(t_head0, time.time())
     head_series = series.stats(t_head0, time.time())
-    contended_rerun = (sentinel_mid > CONTENDED_FACTOR * QUIET_SENTINEL_SEC
-                       or _during_contended(head_during)
-                       or _series_contended(head_series))
+    contended_rerun = _series_contended(head_series)
     if contended_rerun:
-        print(f"contended headline pass (sentinel {sentinel_mid}, "
-              f"steal {head_during}, series {head_series}); "
+        print(f"contended headline pass (series {head_series}); "
               f"re-running headline once",
               file=sys.stderr, flush=True)
-        for name in HEADLINE:
-            times[name] = round(min(times[name], run(name)), 3)
-            release_caches()
-            series.take()
-        head_during = sampler.stats(t_head0, time.time())
+        rerun = suite(HEADLINE, 1)
+        times = {name: min(t, rerun[name]) for name, t in times.items()}
         head_series = series.stats(t_head0, time.time())
 
     # round-2 additions, reported separately so the headline total stays
     # comparable against BASELINE.md's 21-query suite
     t_extra0 = time.time()
-    extra: dict[str, float] = {}
-    for name in EXTRA:
-        extra[name] = round(min(run(name) for _ in range(nruns)), 3)
-        release_caches()
-        series.take()
-    extras_during = sampler.stats(t_extra0, time.time())
+    extra = suite(EXTRA, nruns)
     extras_series = series.stats(t_extra0, time.time())
 
     total = round(sum(times.values()), 3)
@@ -733,21 +585,14 @@ def main() -> None:
     # the extras line (long, best-effort) followed by the compact
     # headline object as the FINAL line the driver parses.
     extras_out = os.environ.get("SPARK_GRAFT_EXTRAS_OUT",
-                                os.path.join(os.path.dirname(
-                                    os.path.abspath(__file__)),
-                                    "BENCH_EXTRAS.json"))
-    extras_sentinel = contention_sentinel()
+                                os.path.join(HERE, "BENCH_EXTRAS.json"))
     extras_record = {"metric": "extra_queries_seconds", "unit": "sec",
-                     "sf": sf_num if sf_num is not None else sf,
+                     "sf": sf,
                      "queries": extra,
-                     "sentinel_sec": extras_sentinel,
+                     "sentinel_sec": contention_sentinel(),
                      "sentinel_quiet_nominal": QUIET_SENTINEL_SEC,
-                     "sentinel_during": extras_during,
                      "sentinel_series": extras_series,
-                     "contended": (extras_sentinel
-                                   > CONTENDED_FACTOR * QUIET_SENTINEL_SEC)
-                     or _during_contended(extras_during)
-                     or _series_contended(extras_series),
+                     "contended": _series_contended(extras_series),
                      **_run_tags()}
     with open(extras_out, "w") as fh:
         json.dump(extras_record, fh, indent=1, sort_keys=True)
@@ -756,44 +601,31 @@ def main() -> None:
     # cross-round extras history only survived via git archaeology.
     # Append every run to a committed JSONL so history is durable
     # even if a round forgets to commit the snapshot.
-    hist = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "BENCH_EXTRAS_HISTORY.jsonl")
-    with open(hist, "a") as fh:
+    with open(os.path.join(HERE, "BENCH_EXTRAS_HISTORY.jsonl"),
+              "a") as fh:
         fh.write(json.dumps(extras_record, sort_keys=True) + "\n")
     print(json.dumps({"metric": "extra_queries_seconds",
                       "unit": "sec", "queries": extra}))
     final_sentinel = contention_sentinel()
     join_gibs = join_throughput_gibs(spark)
-    sampler.stop()
     print(json.dumps({
         "metric": "headline_suite_seconds",
         "value": total,
         "unit": "sec",
         "queries": times,
-        "sf": sf_num if sf_num is not None else sf,
+        "sf": sf,
         "cpus": int(cpus) if cpus.isdigit() else cpus,
         # reference harness metric shape (join.py:158-166): inner-join
         # throughput over 2×2^24-row float64 tables, unique keys.
         "join_gibs": join_gibs,
         "sentinel_sec": final_sentinel,
-        "sentinel_mid_sec": sentinel_mid,
         "sentinel_quiet_nominal": QUIET_SENTINEL_SEC,
-        # during-window samples (r13): one sentinel rep every ~2 s in a
-        # subprocess across the headline / extras windows — catches the
-        # bursty interference the edge point samples miss
-        "sentinel_during_headline": head_during,
-        "sentinel_during_extras": extras_during,
         "sentinel_series_headline": head_series,
         "sentinel_series_extras": extras_series,
         "contended_rerun": contended_rerun,
         # a contended snapshot self-EXCLUDES from cross-round diff
-        # bases (the BASELINE.md cross-epoch rule, applied by code);
-        # r13: the during-window evidence (steal + probe series)
-        # joins the decision
-        "contended": (min(final_sentinel, sentinel_mid)
-                      > CONTENDED_FACTOR * QUIET_SENTINEL_SEC)
-        or _during_contended(head_during)
-        or _series_contended(head_series),
+        # bases (the BASELINE.md cross-epoch rule, applied by code)
+        "contended": _series_contended(head_series),
     }))
 
 

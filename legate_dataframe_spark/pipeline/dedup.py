@@ -1386,6 +1386,14 @@ def remove_dup_spans(
     the dup_ratio signal.  A null text gives a null ``text_clean``
     (null n_tokens/kept_tokens/dup_ratio, nothing removed).
 
+    Tokens are ``split(trim(lower(text)), '\\s+')``, and ``trim``
+    strips ASCII spaces only (DuckDB's ``trim`` does too), so a text
+    that starts with a tab or newline has an empty first token: it
+    counts in ``n_tokens`` and is cut like any other token
+    (``"\\tfoo bar baz"`` has 4 tokens here and 3 in
+    :func:`remove_dup_spans_raw`).  Every word-front oracle shares
+    this contract.
+
     Scale shape: the k-gram digest groupBy is the one corpus-sized
     exchange (shared with the signal query); only duplicated shingles
     pay the ×k position explode; tokens never shuffle — each touched

@@ -102,6 +102,8 @@ def bag_diff_counts(left: DataFrame,
 
 @contextlib.contextmanager
 def _temp_db(spark: SparkSession, stem: str):
+    """uuid-suffixed session-temp database (ADVICE r05: fixed names +
+    DROP CASCADE clobber concurrent runs sharing a warehouse)."""
     db = f"{stem}_{uuid.uuid4().hex[:8]}"
     loc = tempfile.mkdtemp(prefix=f"{stem}_")
     spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
@@ -110,6 +112,12 @@ def _temp_db(spark: SparkSession, stem: str):
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         shutil.rmtree(loc, ignore_errors=True)
+
+
+def _assert_bucketed(plan: str, what: str) -> None:
+    if "Bucketed: true" not in plan:
+        raise AssertionError(
+            f"{what} did not read the index bucket-aware:\n{plan}")
 
 
 # ===================== change-data-feed APPLY (producer↔consumer law)

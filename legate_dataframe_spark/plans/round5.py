@@ -16,8 +16,6 @@ Exchange in the plan.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import shutil
 import tempfile
 import uuid
@@ -26,13 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from legate_dataframe_spark.plans.relational import load_table
-
-
-def _plan_of(df: DataFrame, mode: str = "simple") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode=mode)
-    return buf.getvalue()
+from legate_dataframe_spark.plans.round10b import _plan_of
 
 
 # ======================================================= bucketed storage
@@ -79,7 +71,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         lb = read_bucketed(spark, f"{db}.lineitem_b")
         ob = read_bucketed(spark, f"{db}.orders_b")
         joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey, "inner")
-        plan = _plan_of(joined)
+        plan = _plan_of(joined, "simple")
         if "SortMergeJoin" not in plan or "Exchange" in plan:
             raise AssertionError(
                 "bucketed join planned a shuffle — bucket metadata "

@@ -24,14 +24,11 @@ results materialized eagerly so no lazy /tmp dependency escapes.
 
 from __future__ import annotations
 
-import contextlib
 import glob
-import io
 import os
 import re
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -43,27 +40,7 @@ from legate_dataframe_spark.plans.pipeline_queries import (
     DEDUP_CLUSTERS_SQL,
 )
 from legate_dataframe_spark.plans.relational import load_table
-
-
-def _plan_of(df: DataFrame, mode: str = "simple") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode=mode)
-    return buf.getvalue()
-
-
-@contextlib.contextmanager
-def _temp_db(spark: SparkSession, stem: str):
-    """uuid-suffixed session-temp database (ADVICE r05: fixed names +
-    DROP CASCADE clobber concurrent runs sharing a warehouse)."""
-    db = f"{stem}_{uuid.uuid4().hex[:8]}"
-    loc = tempfile.mkdtemp(prefix=f"{stem}_")
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-    try:
-        yield db
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        shutil.rmtree(loc, ignore_errors=True)
+from legate_dataframe_spark.plans.round10b import _plan_of, _temp_db
 
 
 # =================================================== incremental components

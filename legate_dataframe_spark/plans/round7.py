@@ -29,8 +29,6 @@ an atexit cleanup for the backing tempdir.
 from __future__ import annotations
 
 import atexit
-import contextlib
-import io
 import os
 import re
 import shutil
@@ -47,25 +45,7 @@ from legate_dataframe_spark.plans.pipeline_queries import (
     DEDUP_CLUSTERS_SQL,
 )
 from legate_dataframe_spark.plans.relational import load_table
-
-
-def _plan_of(df: DataFrame, mode: str = "simple") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode=mode)
-    return buf.getvalue()
-
-
-@contextlib.contextmanager
-def _temp_db(spark: SparkSession, stem: str):
-    db = f"{stem}_{uuid.uuid4().hex[:8]}"
-    loc = tempfile.mkdtemp(prefix=f"{stem}_")
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-    try:
-        yield db
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        shutil.rmtree(loc, ignore_errors=True)
+from legate_dataframe_spark.plans.round10b import _plan_of, _temp_db
 
 
 def _assert_bucketed_merge(plan: str, what: str, max_exchanges: int = 2):

@@ -26,12 +26,9 @@ dropped (CASCADE) before returning.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,31 +39,11 @@ from legate_dataframe_spark.plans.pipeline_queries import (
     _minhash_sql,
 )
 from legate_dataframe_spark.plans.relational import load_table
-
-
-def _plan_of(df: DataFrame, mode: str = "formatted") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode=mode)
-    return buf.getvalue()
-
-
-@contextlib.contextmanager
-def _temp_db(spark: SparkSession, stem: str):
-    db = f"{stem}_{uuid.uuid4().hex[:8]}"
-    loc = tempfile.mkdtemp(prefix=f"{stem}_")
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-    try:
-        yield db
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        shutil.rmtree(loc, ignore_errors=True)
-
-
-def _assert_bucketed(plan: str, what: str) -> None:
-    if "Bucketed: true" not in plan:
-        raise AssertionError(
-            f"{what} did not read the index bucket-aware:\n{plan}")
+from legate_dataframe_spark.plans.round10b import (
+    _assert_bucketed,
+    _plan_of,
+    _temp_db,
+)
 
 
 # ============================================= minhash index DELETE

@@ -144,12 +144,9 @@ def reproduce(candidates: list[tuple], threshold: float,
     ``threshold x base`` on a quiet box.  Imports bench machinery
     lazily — reproduction spins up Spark, the report alone must not.
     """
-    import time
-
     sys.path.insert(0, here)
     import bench
     from legate_dataframe_spark.core.caching import release_caches
-    from legate_dataframe_spark.plans.registry import QUERIES
     from legate_dataframe_spark.session import get_session
 
     spark = get_session(app_name="ldf-ledger-confirm",
@@ -157,14 +154,10 @@ def reproduce(candidates: list[tuple], threshold: float,
     spark.sparkContext.setLogLevel("ERROR")
     out = []
     for q, ratio, t, b in candidates:
-        fn = getattr(QUERIES[q], "__wrapped__", QUERIES[q])
         times = []
         for _ in range(runs):
             release_caches()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop") \
-                .mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
+            times.append(bench.time_query(spark, q, sf_dir))
         sent = bench.contention_sentinel()
         best = min(times)
         quiet = sent <= bench.CONTENDED_FACTOR * bench.QUIET_SENTINEL_SEC

@@ -20,14 +20,13 @@ import io
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from legate_dataframe_spark.core.caching import release_caches  # noqa: E402
 from legate_dataframe_spark.plans.registry import QUERIES  # noqa: E402
 from legate_dataframe_spark.session import get_session  # noqa: E402
-from bench import contention_sentinel  # noqa: E402
+from bench import contention_sentinel, time_query  # noqa: E402
 
 
 def main() -> None:
@@ -52,9 +51,8 @@ def main() -> None:
 
     out: dict[str, float] = {}
     for name in args.queries:
-        fn = getattr(QUERIES[name], "__wrapped__", QUERIES[name])
         if args.plans:
-            df = fn(spark, args.sf)
+            df = QUERIES[name].__wrapped__(spark, args.sf)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain(mode="formatted")
@@ -68,9 +66,7 @@ def main() -> None:
         best = float("inf")
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"opt:{name}#{i}")
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+            best = min(best, time_query(spark, name, args.sf))
             spark.sparkContext.setJobDescription(None)
         release_caches()
         out[name] = round(best, 3)

@@ -19,9 +19,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_query  # noqa: E402
 
 
 def main() -> None:
@@ -33,7 +34,6 @@ def main() -> None:
     args = ap.parse_args()
 
     from legate_dataframe_spark.core.caching import release_caches
-    from legate_dataframe_spark.plans.registry import QUERIES
     from legate_dataframe_spark.session import get_session
 
     spark = get_session(app_name="ldf-probe",
@@ -42,13 +42,8 @@ def main() -> None:
     out: dict[str, list[float]] = {}
     for name in args.names:
         release_caches()
-        fn = getattr(QUERIES[name], "__wrapped__", QUERIES[name])
-        runs = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop") \
-                .mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
+        runs = [round(time_query(spark, name, args.sf_dir), 3)
+                for _ in range(args.runs)]
         out[name] = runs
         print(f"# {name}: {runs}", file=sys.stderr, flush=True)
     print(json.dumps({"sf_dir": args.sf_dir, "runs": out}))

@@ -56,7 +56,7 @@ import os
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # one row per data file; min/max are stored as STRINGS whose
@@ -239,6 +239,67 @@ def _norm_path(uri: str) -> str:
     return _canon(unquote(uri))
 
 
+# ---------------- the one Bloom format: every bitmap this package
+# writes or probes — dedup.bloom_bitmap, manifest blooms, export
+# sidecars — is m_bits/64 longs, key k setting bit
+# pmod(xxhash64(k, i), m_bits) for i < n_hashes (bit p is bit p % 64 of
+# word p DIV 64).  Manifests and sidecars persist bitmaps in this
+# layout, so it is defined here once; pipeline modules import it.
+
+def _check_bloom(m_bits: int, n_hashes: int) -> None:
+    """The parameter contract, checked before any Spark work: a
+    non-positive or non-word-multiple ``m_bits`` or no probe would
+    fail inside a job or, for ``m_bits < 0``, silently prune every
+    key."""
+    if not (m_bits > 0 and m_bits % 64 == 0 and n_hashes >= 1):
+        raise ValueError(
+            f"Bloom parameters need m_bits > 0 and a multiple of 64 and "
+            f"n_hashes >= 1, got m_bits={m_bits}, n_hashes={n_hashes}")
+
+
+def _empty_bloom(m_bits: int) -> list[int]:
+    """The bitmap of a key set with no keys (an empty file)."""
+    return [0] * (m_bits // 64)
+
+
+def _bloom_positions(key: Column, m_bits: int, n_hashes: int) -> list:
+    """The ``n_hashes`` bit positions of ``key`` as columns
+    ``__p0..`` (precomputed so :func:`_bloom_hits` is a plain SQL
+    expression over them)."""
+    _check_bloom(m_bits, n_hashes)
+    return [F.pmod(F.xxhash64(key, F.lit(i)), F.lit(m_bits)).alias(f"__p{i}")
+            for i in range(n_hashes)]
+
+
+def _bloom_hits(n_hashes: int) -> Column:
+    """Membership predicate: every ``__p{i}`` bit is set in the joined
+    ``bloom`` array<long> column (1-based element_at)."""
+    return F.expr(" AND ".join(
+        f"(shiftright(element_at(bloom, CAST(__p{i} DIV 64 AS INT) + 1), "
+        f"CAST(__p{i} % 64 AS INT)) & 1) = 1"
+        for i in range(n_hashes)))
+
+
+def _bloom_pack(df: DataFrame, key: Column, m_bits: int, n_hashes: int,
+                by: Sequence[str] = ()) -> DataFrame:
+    """Bitmaps of ``key`` over ``df``, one ``(*by, bloom)`` row per
+    ``by`` group (one row when ``by`` is empty).  Fully distributed:
+    positions are bit-OR-combined per (group, 64-bit word), then packed
+    per group — the only driver-adjacent object is a bitmap."""
+    pos = df.select(*by, F.explode(F.array(
+        *_bloom_positions(key, m_bits, n_hashes))).alias("p"))
+    words = pos.select(
+        *by, F.shiftright(F.col("p"), 6).cast("int").alias("w"),
+        F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("b"))
+    return (words.groupBy(*by, "w").agg(F.bit_or("b").alias("bits"))
+            .groupBy(*by).agg(F.map_from_entries(F.collect_list(
+                F.struct(F.col("w"), F.col("bits")))).alias("m"))
+            .select(*by, F.transform(
+                F.sequence(F.lit(0), F.lit(m_bits // 64 - 1)),
+                lambda i: F.coalesce(F.element_at(F.col("m"), i),
+                                     F.lit(0).cast("long"))).alias("bloom")))
+
+
 def _file_blooms(
     spark: SparkSession,
     paths: Sequence[str],
@@ -248,32 +309,19 @@ def _file_blooms(
 ) -> dict[str, list[int]]:
     """Per-file Bloom bitmaps over ``bloom_col``, ONE distributed pass
     over exactly ``paths`` (an append's refresh passes only the new
-    files, so per-append bloom cost is O(new files' rows)).  The
-    bitmap build is the fully-distributed shape of
-    pipeline/dedup.py::bloom_bitmap keyed by ``input_file_name()``:
-    positions → per-(file, word) bit_or → per-file packed array.  The
-    only driver-side object is file-count × (m_bits/64) longs — the
-    manifest's own scale class."""
-    if m_bits % 64:
-        raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
-    m_words = m_bits // 64
+    files, so per-append bloom cost is O(new files' rows)), keyed by
+    ``input_file_name()``.  A file with no rows gets the all-zero
+    bitmap (no key can be in it).  The only driver-side object is
+    file-count × (m_bits/64) longs — the manifest's own scale
+    class."""
     df = (spark.read.parquet(*[_spark_uri(p) for p in paths])
           .select(F.col(bloom_col).alias("__k"),
                   F.input_file_name().alias("__f")))
-    pos = df.select("__f", F.explode(F.array(*[
-        F.pmod(F.xxhash64(F.col("__k"), F.lit(i)), F.lit(m_bits))
-        for i in range(n_hashes)])).alias("p"))
-    words = pos.select(
-        "__f", F.shiftright(F.col("p"), 6).cast("int").alias("w"),
-        F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("b"))
-    per = (words.groupBy("__f", "w").agg(F.bit_or("b").alias("bits"))
-           .groupBy("__f").agg(F.map_from_entries(F.collect_list(
-               F.struct(F.col("w"), F.col("bits")))).alias("m"))
-           .select("__f", F.transform(
-               F.sequence(F.lit(0), F.lit(m_words - 1)),
-               lambda i: F.coalesce(F.element_at(F.col("m"), i),
-                                    F.lit(0).cast("long"))).alias("bloom")))
-    return {_norm_path(r["__f"]): list(r["bloom"]) for r in per.collect()}
+    out = {p: _empty_bloom(m_bits) for p in paths}
+    for r in _bloom_pack(df, F.col("__k"), m_bits, n_hashes,
+                         by=["__f"]).collect():
+        out[_norm_path(r["__f"])] = list(r["bloom"])
+    return out
 
 
 def _part_of(path: str) -> str | None:
@@ -325,8 +373,12 @@ def write_manifest(
     append pays O(new files' rows)); size ``bloom_bits`` to ~10 bits
     per expected distinct key per file for ~1% false positives.  A
     false positive only wastes a probe read; false negatives are
-    impossible, so a bloom-planned lookup stays EXACT.
+    impossible, so a bloom-planned lookup stays EXACT.  ``bloom_bits``
+    must be a positive multiple of 64 and ``bloom_hashes`` ≥ 1
+    (``ValueError`` otherwise, before any Spark work).
     """
+    if bloom_col is not None:
+        _check_bloom(bloom_bits, bloom_hashes)
     phys = physical_table or table_name
     if parts is not None:
         loc = table_location(spark, phys)
@@ -384,12 +436,8 @@ def write_manifest(
             rows.append(known[path])
             continue
         bucket, n_rows, mn, mx = _file_manifest_row(path, stats_col)
-        # a zero-row file is absent from the bloom pass → all-zero
-        # bitmap (correct: no key can be in it)
-        bloom = (blooms.get(path, [0] * (bloom_bits // 64))
-                 if bloom_col is not None else None)
         rows.append((generation, part, bucket, path, n_rows, mn, mx,
-                     bloom,
+                     blooms[path] if bloom_col is not None else None,
                      bloom_bits if bloom_col is not None else None,
                      bloom_hashes if bloom_col is not None else None))
     out = spark.createDataFrame(keep + rows, MANIFEST_SCHEMA)
@@ -511,16 +559,10 @@ def point_lookup_candidates(
         F.col(key_col),
         F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets))
         .cast("int").alias("bucket_id"),
-        *[F.pmod(F.xxhash64(F.col(key_col), F.lit(i)),
-                 F.lit(bloom_bits)).alias(f"__p{i}")
-          for i in range(bloom_hashes)])
-    hits = " AND ".join(
-        f"(shiftright(element_at(bloom, CAST(__p{i} DIV 64 AS INT) + 1), "
-        f"CAST(__p{i} % 64 AS INT)) & 1) = 1"
-        for i in range(bloom_hashes))
+        *_bloom_positions(F.col(key_col), bloom_bits, bloom_hashes))
     return (p.join(F.broadcast(m.select("bucket_id", "file", "bloom")),
                    "bucket_id")
-            .filter(F.expr(hits))
+            .filter(_bloom_hits(bloom_hashes))
             .select(key_col, "file"))
 
 

@@ -1,28 +1,54 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, near-duplicate and span-level.
 
-Design for 100 TB:
-- exact dedup: hash-groupBy on a digest of normalized text — one
-  shuffle keyed by digest (uniform, no skew), keep min doc_id.
-- MinHash+LSH: per-doc signature (narrow map, JVM-only expressions) →
-  explode to (band_idx, band_hash) → self-join per bucket.  The join key
-  includes band_idx so buckets stay small; candidate pairs are then
-  exact-verified with Jaccard.  No all-pairs comparison ever happens.
-- SimHash: signature from md5 bits of shingles; near-dup = Hamming ≤ k
-  via pigeonhole banding (bands auto-widen to k+1, so any radius is
-  exactly recalled through equi-joins — no all-pairs scan).
-- n-gram Jaccard: exact verification primitive; only ever run on
-  LSH/blocked candidate pairs, never all-pairs.
+Exact dedup is one hash-groupBy on the md5 of normalized text — one
+shuffle keyed by digest (uniform, no skew), keeping the min doc_id.
 
-Everything is built-in Spark SQL expressions — hashes via md5 so any
-engine (the DuckDB oracle included) reproduces identical signatures.
+The near-duplicate family splits into the two stages of a distributed
+similarity join, candidate generation then exact verification, and
+each stage has one implementation that every operator calls:
+
+  bucket front  (_shingle_sets + _minhash_buckets) — k-word shingles →
+                md5-derived MinHash signature → (id, band, bh) rows.
+                minhash_lsh_pairs, levenshtein_pairs and the persisted
+                index (build/insert/incremental) share it; each caller
+                keeps its own widen/persist placement.  SimHash
+                (bit-vote over shingle md5s, bands auto-widened to
+                max_hamming + 1 so pigeonhole makes the radius exact)
+                and cosine LSH (similarity.py, hyperplane sign bits)
+                build their own (id, band, bv) rows.
+  candidates    (_band_pairs) — the banded self-join on (band, bucket
+                value, l.id < r.id), an optional per-pair score
+                (hamming, cosine), one row per pair, and the
+                max_bucket_size guard against boilerplate clusters.
+                No all-pairs comparison ever happens.
+  verify        (_jaccard_verify) — exact Jaccard of distinct shingle
+                sets, rounded to 6 places; edit distance
+                (levenshtein_pairs), Hamming and cosine verify their
+                own score.  ngram_jaccard_pairs is an exact all-pairs
+                Jaccard within blocks: a shared-shingle inverted index
+                over xxhash64 digests counts intersections from its
+                postings, so it neither bands nor calls the verify.
+  overlap       (_overlap_digests, _shared_counts) — cross-corpus
+                decontamination: md5 shingle digests of both corpora
+                with a stop-shingle guard, then one digest join +
+                group count; bloom_cross_corpus_overlap first prunes
+                the train side with a broadcast bitmap in the one
+                Bloom format of core/manifest.py.
+
+Every signature hash is a built-in SQL expression (md5, xxhash64), so
+the DuckDB oracles reproduce the same buckets.  The span family
+(substring_dup_spans onward) runs one front/cover/rebuild engine whose
+front is a numpy ``mapInArrow`` rolling digest; its stage map is the
+comment above ``_ROLL_B``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from legate_dataframe_spark.core import manifest as mf
 from legate_dataframe_spark.core.caching import tracked_persist
 from legate_dataframe_spark.core.partitioning import widen_partitions
 
@@ -121,12 +147,27 @@ def minhash_shingles_and_buckets(
     a persisted band index) yields candidate pairs.
     MEMORY_AND_DISK persist spills instead of OOMing at corpus scale.
     """
-    rows = num_hashes // bands
-    docs = widen_partitions(docs)
-    sh = tracked_persist(docs.select(
+    sh = tracked_persist(
+        _shingle_sets(widen_partitions(docs), text_col, id_col, shingle_k))
+    return sh, _minhash_buckets(sh, num_hashes, bands)
+
+
+def _shingle_sets(docs: DataFrame, text_col: str, id_col: str,
+                  shingle_k: int) -> DataFrame:
+    """(id, sh) — each document's k-word shingle array; documents
+    with no shingle (fewer than k tokens) are dropped."""
+    return docs.select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), shingle_k).alias("sh"),
-    ).filter(F.size("sh") > 0))
+    ).filter(F.size("sh") > 0)
+
+
+def _minhash_buckets(sh: DataFrame, num_hashes: int,
+                     bands: int) -> DataFrame:
+    """(id, sh) → (id, band, bh) LSH bucket rows: the MinHash signature
+    cut into ``bands`` bands of num_hashes // bands rows, each band
+    hashed to one bucket value."""
+    rows = num_hashes // bands
     # stage the per-shingle hashes as a real column, then the signature
     # (md5 runs once per shingle, not once per hash function)
     sig = (sh.select("id", shingle_hashes(F.col("sh")).alias("hh"))
@@ -140,9 +181,63 @@ def minhash_shingles_and_buckets(
     ]
     # bucket rows carry ONLY (id, band, bh): the bucket self-join and the
     # pair-dedup shuffle narrow 3-column rows, never the shingle arrays.
-    buckets = (sig.select("id", F.explode(F.array(*band_cols)).alias("bk"))
-               .select("id", F.col("bk.band").alias("band"),
-                       F.col("bk.bh").alias("bh")))
+    return (sig.select("id", F.explode(F.array(*band_cols)).alias("bk"))
+            .select("id", F.col("bk.band").alias("band"),
+                    F.col("bk.bh").alias("bh")))
+
+
+def _band_pairs(buckets: DataFrame, key: str, score: Column | None = None,
+                max_bucket_size: int | None = None) -> DataFrame:
+    """The banded candidate self-join: rows (id, band, ``key``, …)
+    pair up when they share a (band, ``key``) bucket, once per
+    unordered pair → (id_a, id_b[, score]) with id_a < id_b.
+    ``score`` is computed per joined pair from the ``l.``/``r.``
+    sides (before the pair dedup, so every bucket copy of a pair
+    carries the same value).
+
+    ``max_bucket_size`` drops buckets holding more members before the
+    join — the boilerplate-cluster guard: a k-doc template bucket
+    emits O(k²) pairs on one join key (a skew bomb).  The window count
+    is one extra shuffle on the keys the join uses anyway; AQE reuses
+    the partitioning."""
+    if max_bucket_size is not None:
+        n_in_bucket = F.count("*").over(Window.partitionBy("band", key))
+        buckets = (buckets.withColumn("__n", n_in_bucket)
+                   .filter(F.col("__n") <= max_bucket_size).drop("__n"))
+    cols = [F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")]
+    if score is not None:
+        cols.append(score)
+    l, r = buckets.alias("l"), buckets.alias("r")
+    return (
+        l.join(r, (F.col("l.band") == F.col("r.band"))
+               & (F.col(f"l.{key}") == F.col(f"r.{key}"))
+               & (F.col("l.id") < F.col("r.id")))
+        .select(*cols)
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _jaccard_verify(cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
+                    threshold: float, a: str = "id_a",
+                    b: str = "id_b") -> DataFrame:
+    """Exact set-Jaccard verify of candidate pairs (a, b): ``sets_a``
+    and ``sets_b`` are (id, sh) frames of DISTINCT shingle sets; only
+    the candidate ids fetch theirs (two id-keyed joins — at scale the
+    candidate side is tiny next to the corpus, and AQE broadcasts it).
+    → (a, b, jaccard) with the Jaccard rounded to 6 places and
+    ≥ ``threshold``."""
+    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
+    union = (F.size("sa") + F.size("sb")).cast("double") - inter
+    # ANSI mode (Spark 4 default) makes 0/0 an ERROR, not null — guard
+    # the degenerate both-empty pair.
+    jac = F.when(union > 0, F.round(inter / union, 6))
+    return (
+        cand.join(sets_a.select(F.col("id").alias(a), F.col("sh").alias("sa")), a)
+        .join(sets_b.select(F.col("id").alias(b), F.col("sh").alias("sb")), b)
+        .withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
     return sh, buckets
 
 
@@ -172,41 +267,10 @@ def minhash_lsh_pairs(
     sh, buckets = minhash_shingles_and_buckets(
         docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
         bands=bands, shingle_k=shingle_k)
-    if max_bucket_size is not None:
-        # window count per bucket, drop oversized buckets before the
-        # self-join (the count is one extra shuffle on the same keys
-        # the join uses anyway; AQE reuses the partitioning)
-        from pyspark.sql import Window as _W
-
-        n_in_bucket = F.count("*").over(_W.partitionBy("band", "bh"))
-        buckets = (buckets.withColumn("__n", n_in_bucket)
-                   .filter(F.col("__n") <= max_bucket_size).drop("__n"))
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bh") == F.col("r.bh"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # exact-verify: fetch shingle sets for the (few) candidate ids only —
-    # two id-keyed joins; at scale the candidate side is tiny relative to
-    # the corpus, and AQE turns these into broadcast joins.
-    sh_a = sh.select(F.col("id").alias("id_a"),
-                     F.array_distinct("sh").alias("sa"))
-    sh_b = sh.select(F.col("id").alias("id_b"),
-                     F.array_distinct("sh").alias("sb"))
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
-    union = (F.size("sa") + F.size("sb")).cast("double") - inter
-    # ANSI mode (Spark 4 default) makes 0/0 an ERROR, not null — guard
-    # the degenerate both-empty pair.
-    jac = F.when(union > 0, F.round(inter / union, 6))
-    return (
-        cand.join(sh_a, "id_a").join(sh_b, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sets = sh.select("id", F.array_distinct("sh").alias("sh"))
+    return _jaccard_verify(
+        _band_pairs(buckets, "bh", max_bucket_size=max_bucket_size),
+        sets, sets, jaccard_threshold)
 
 
 def build_minhash_index(
@@ -407,23 +471,8 @@ def minhash_pairs_from_index(
     if restrict_ids is not None:
         ids = restrict_ids.toDF("id")
         buckets = buckets.join(F.broadcast(ids), "id", "left_semi")
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bh") == F.col("r.bh"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh_a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sa"))
-    sh_b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sb"))
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
-    union = (F.size("sa") + F.size("sb")).cast("double") - inter
-    jac = F.when(union > 0, F.round(inter / union, 6))  # ANSI-safe 0/0
-    return (cand.join(sh_a, "id_a").join(sh_b, "id_b")
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b", "jaccard"))
+    return _jaccard_verify(_band_pairs(buckets, "bh"), sh, sh,
+                           jaccard_threshold)
 
 
 def incremental_minhash_dedup(
@@ -451,9 +500,6 @@ def incremental_minhash_dedup(
 
     idx_bands = (read_bucketed(spark, f"{table_prefix}_bands")
                  .withColumnRenamed("id", "corpus_id"))
-    idx_sh = (read_bucketed(spark, f"{table_prefix}_shingles")
-              .select(F.col("id").alias("corpus_id"),
-                      F.col("sh").alias("sa")))
     sh_b, buckets_b = minhash_shingles_and_buckets(
         batch, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
         bands=bands, shingle_k=shingle_k)
@@ -462,15 +508,10 @@ def incremental_minhash_dedup(
                   ["band", "bh"])
             .select("corpus_id", "batch_id")
             .dropDuplicates(["corpus_id", "batch_id"]))
-    sb = sh_b.select(F.col("id").alias("batch_id"),
-                     F.array_distinct("sh").alias("sb"))
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
-    union = (F.size("sa") + F.size("sb")).cast("double") - inter
-    jac = F.when(union > 0, F.round(inter / union, 6))  # ANSI-safe 0/0
-    return (cand.join(idx_sh, "corpus_id").join(sb, "batch_id")
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("corpus_id", "batch_id", "jaccard"))
+    return _jaccard_verify(
+        cand, read_bucketed(spark, f"{table_prefix}_shingles"),
+        sh_b.select("id", F.array_distinct("sh").alias("sh")),
+        jaccard_threshold, a="corpus_id", b="batch_id")
 
 
 def ngram_jaccard_pairs(
@@ -605,26 +646,10 @@ def simhash_pairs_from_signatures(
         ])).alias("bk"),
     ).select("id", "simhash", F.col("bk.band").alias("band"),
              F.col("bk.bv").alias("bv"))
-    if max_bucket_size is not None:
-        # same boilerplate-cluster guard as minhash_lsh_pairs: a k-doc
-        # template bucket emits O(k²) pairs on one join key (skew bomb)
-        from pyspark.sql import Window as _W
-
-        banded = (banded
-                  .withColumn("__n", F.count("*").over(
-                      _W.partitionBy("band", "bv")))
-                  .filter(F.col("__n") <= max_bucket_size).drop("__n"))
-    l, r = banded.alias("l"), banded.alias("r")
-    return (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bv") == F.col("r.bv"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash")))
-                .cast("long").alias("hamming"))
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    hamming = (F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash")))
+               .cast("long").alias("hamming"))
+    return (_band_pairs(banded, "bv", hamming, max_bucket_size)
+            .filter(F.col("hamming") <= max_hamming))
 
 
 def _simhash_of(features: Column, bits: int) -> Column:
@@ -704,31 +729,9 @@ def levenshtein_pairs(
     # the empty edge tokens raw tokenization keeps on edge-whitespace
     # docs, silently diverging the candidate sets); normalization is
     # only for the edit-distance comparison below
-    sh = docs.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_k).alias("sh"),
-    ).filter(F.size("sh") > 0)
-    rows = num_hashes // bands
-    sig = (sh.select("id", shingle_hashes(F.col("sh")).alias("hh"))
-           .select("id", *minhash_signature("hh", num_hashes)))
-    band_cols = [
-        F.struct(F.lit(b).alias("band"),
-                 F.md5(F.concat_ws("|", *[F.col(f"mh{b * rows + r}").cast("string")
-                                          for r in range(rows)]))
-                 .alias("bh"))
-        for b in range(bands)
-    ]
-    buckets = (sig.select("id", F.explode(F.array(*band_cols)).alias("bk"))
-               .select("id", F.col("bk.band").alias("band"),
-                       F.col("bk.bh").alias("bh")))
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bh") == F.col("r.bh"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_pairs(_minhash_buckets(
+        _shingle_sets(docs, text_col, id_col, shingle_k), num_hashes, bands),
+        "bh")
     ta = norm.select(F.col("id").alias("id_a"), F.col("txt").alias("ta"))
     tb = norm.select(F.col("id").alias("id_b"), F.col("txt").alias("tb"))
     limit = F.floor(F.lit(max_rel_dist)
@@ -773,6 +776,17 @@ def cross_corpus_overlap(
     benchmark docs (stop-shingle guard: a boilerplate phrase shared by
     every benchmark doc would otherwise fan out |train-hits| × |bench|).
     """
+    t, b = _overlap_digests(train, bench, text_col, id_col, shingle_k,
+                            max_shingle_df)
+    return _shared_counts(t, b, min_shared)
+
+
+def _overlap_digests(train: DataFrame, bench: DataFrame, text_col: str,
+                     id_col: str, shingle_k: int,
+                     max_shingle_df: int | None) -> tuple[DataFrame, DataFrame]:
+    """(train_id, dig) and (bench_id, dig) rows — the md5 digests of
+    each document's distinct k-word shingles — with the stop-shingle
+    guard applied to the bench side."""
     def digests(df: DataFrame, out_id: str) -> DataFrame:
         sh = F.array_distinct(word_shingles(F.col(text_col), shingle_k))
         return (df.select(F.col(id_col).alias(out_id), sh.alias("sh"))
@@ -780,14 +794,17 @@ def cross_corpus_overlap(
                 .select(out_id, F.explode("sh").alias("s"))
                 .select(out_id, F.md5("s").alias("dig")))
 
-    t = digests(widen_partitions(train), "train_id")
     b = digests(bench, "bench_id")
     if max_shingle_df is not None:
-        from pyspark.sql import Window as _W
-
         b = (b.withColumn("__df", F.size(F.collect_set("bench_id").over(
-                _W.partitionBy("dig"))))
+                Window.partitionBy("dig"))))
              .filter(F.col("__df") <= max_shingle_df).drop("__df"))
+    return digests(widen_partitions(train), "train_id"), b
+
+
+def _shared_counts(t: DataFrame, b: DataFrame, min_shared: int) -> DataFrame:
+    """(train_id, bench_id, n_shared) for pairs sharing at least
+    ``min_shared`` digests: one digest equi-join + group-count."""
     return (
         t.join(b, "dig")
         .groupBy("train_id", "bench_id")
@@ -826,41 +843,10 @@ def bloom_bitmap(
     distributed: positions are bit-OR-combined per 64-bit word in a
     groupBy, then packed into the array in a single 1-row aggregate —
     the only driver-adjacent object is the bitmap itself, which is the
-    point (it must broadcast).
+    point (it must broadcast).  ``m_bits`` must be a positive multiple
+    of 64 and ``n_hashes`` ≥ 1 (``ValueError`` otherwise).
     """
-    if m_bits % 64:
-        raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
-    m_words = m_bits // 64
-    pos = digs.select(F.explode(F.array(*[
-        F.pmod(F.xxhash64(F.col(dig_col), F.lit(i)), F.lit(m_bits)).alias("p")
-        for i in range(n_hashes)])).alias("p"))
-    words = pos.select(
-        F.shiftright(F.col("p"), 6).cast("int").alias("w"),
-        F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("b"))
-    packed = (words.groupBy("w").agg(F.bit_or("b").alias("bits"))
-              .groupBy().agg(F.map_from_entries(F.collect_list(
-                  F.struct(F.col("w"), F.col("bits")))).alias("m")))
-    return packed.select(F.transform(
-        F.sequence(F.lit(0), F.lit(m_words - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("m"), i),
-                             F.lit(0).cast("long"))).alias("bloom"))
-
-
-def _bloom_position_cols(dig: Column, m_bits: int, n_hashes: int) -> list:
-    """The ``n_hashes`` bit positions of ``dig`` as named columns
-    ``__p0..`` (precomputed so the membership filter is a plain SQL
-    expression over them)."""
-    return [F.pmod(F.xxhash64(dig, F.lit(i)), F.lit(m_bits)).alias(f"__p{i}")
-            for i in range(n_hashes)]
-
-
-def _bloom_hits_sql(n_hashes: int) -> str:
-    """SQL predicate: every ``__p{i}`` bit is set in the joined
-    ``bloom`` array<long> column (1-based element_at)."""
-    return " AND ".join(
-        f"(shiftright(element_at(bloom, CAST(__p{i} DIV 64 AS INT) + 1), "
-        f"CAST(__p{i} % 64 AS INT)) & 1) = 1"
-        for i in range(n_hashes))
+    return mf._bloom_pack(digs, F.col(dig_col), m_bits, n_hashes)
 
 
 def bloom_cross_corpus_overlap(
@@ -879,22 +865,12 @@ def bloom_cross_corpus_overlap(
     training side's shingle digests.  Plan shape: train scan → narrow
     shingle/digest map → 1-row broadcast bitmap check (BNLJ against a
     single-row side) → digest equi-join with the bench side → one
-    group-count shuffle of only the overlapping rows.
+    group-count shuffle of only the overlapping rows.  ``m_bits`` must
+    be a positive multiple of 64 and ``n_hashes`` ≥ 1 (``ValueError``
+    otherwise, before any Spark work).
     """
-    def digests(df: DataFrame, out_id: str) -> DataFrame:
-        sh = F.array_distinct(word_shingles(F.col(text_col), shingle_k))
-        return (df.select(F.col(id_col).alias(out_id), sh.alias("sh"))
-                .filter(F.size("sh") > 0)
-                .select(out_id, F.explode("sh").alias("s"))
-                .select(out_id, F.md5("s").alias("dig")))
-
-    b = digests(bench, "bench_id")
-    if max_shingle_df is not None:
-        from pyspark.sql import Window as _W
-
-        b = (b.withColumn("__df", F.size(F.collect_set("bench_id").over(
-                _W.partitionBy("dig"))))
-             .filter(F.col("__df") <= max_shingle_df).drop("__df"))
+    t, b = _overlap_digests(train, bench, text_col, id_col, shingle_k,
+                            max_shingle_df)
     # b is consumed twice (bitmap build + exact join) but deliberately
     # NOT persisted: the bench scan is cheap and pipelined, while a
     # persist interposes a blocking materialization job on the critical
@@ -904,19 +880,12 @@ def bloom_cross_corpus_overlap(
     # not bench corpus size × duplication.
     bitmap = bloom_bitmap(b.select("dig").distinct(),
                           m_bits=m_bits, n_hashes=n_hashes)
-
-    t = digests(widen_partitions(train), "train_id")
     pruned = (t.select("train_id", "dig",
-                       *_bloom_position_cols(F.col("dig"), m_bits, n_hashes))
+                       *mf._bloom_positions(F.col("dig"), m_bits, n_hashes))
               .join(F.broadcast(bitmap))
-              .filter(F.expr(_bloom_hits_sql(n_hashes)))
+              .filter(mf._bloom_hits(n_hashes))
               .select("train_id", "dig"))
-    return (
-        pruned.join(b, "dig")
-        .groupBy("train_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    return _shared_counts(pruned, b, min_shared)
 
 
 # --------------------------------------------------------------------
@@ -1229,8 +1198,6 @@ def _span_cut(base, starts, id_col: str, k: int, front: str = "word",
     A null text has no positions: its cleaned text, size, kept count
     and ratio are null, and it removes nothing."""
     if front == "char":
-        from pyspark.sql import Window
-
         w = Window.partitionBy(id_col).orderBy("pos")
         prev_end = F.max("end").over(
             w.rowsBetween(Window.unboundedPreceding, -1))
@@ -1500,8 +1467,6 @@ def remove_repeated_spans(
     separate groups, not one); the ×k explode is paid only by repeat
     windows and the rebuild is the family's shared codegen array
     arithmetic."""
-    from pyspark.sql import Window
-
     base, kg = _doc_kgrams(docs, text_col, id_col, k)
     w = Window.partitionBy(id_col, "dig")
     repeats = (kg.withColumn("first_pos", F.min("pos").over(w))
@@ -1879,8 +1844,6 @@ def dup_span_intervals(
     the islands window partitions by document over COVERED positions
     only (duplicated spans, not the corpus), so the window state is
     dup-mass-sized."""
-    from pyspark.sql import Window
-
     _, kg = _doc_kgrams(docs, text_col, id_col, k)
     covered = _cover(_crossdoc_starts(kg, id_col), id_col, k)
     w = Window.partitionBy(id_col).orderBy("pos")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from legate_dataframe_spark.core.caching import tracked_persist
 from legate_dataframe_spark.core.partitioning import widen_partitions
+from legate_dataframe_spark.pipeline.dedup import _band_pairs
 
 
 def _to_double(arr: Column) -> Column:
@@ -289,17 +290,9 @@ def cosine_neardup_pairs(
         F.explode(F.array(*band_vals)).alias("bk"),
     ).select("id", "vec", F.col("bk.band").alias("band"),
              F.col("bk.bv").alias("bv")))
-    l, r = base.alias("l"), base.alias("r")
-    return (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bv") == F.col("r.bv"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                F.round(cosine(F.col("l.vec"), F.col("r.vec")), 6)
-                .alias("cos_sim"))
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    cos_sim = F.round(cosine(F.col("l.vec"), F.col("r.vec")), 6).alias("cos_sim")
+    return (_band_pairs(base, "bv", cos_sim)
+            .filter(F.col("cos_sim") >= threshold))
 
 
 def embedding_norms(embeddings: DataFrame, vec_col: str = "embedding",

@@ -162,10 +162,14 @@ def export_certified_shards(
     what makes the exported artifact MAINTAINABLE after the fact: a
     takedown arriving post-export prunes to the shards whose bloom
     may contain the ids instead of rewriting the corpus
-    (:func:`takedown_from_export`).  Returns {file: rows}."""
+    (:func:`takedown_from_export`).  Returns {file: rows}.  Bloom
+    parameters outside the contract of
+    :func:`core.manifest.write_manifest` raise ``ValueError`` before
+    anything is written."""
     from legate_dataframe_spark.core import manifest as mf
     from legate_dataframe_spark.sources.parquet import parquet_write
 
+    mf._check_bloom(bloom_bits, bloom_hashes)
     parquet_write(df, out_dir,
                   max_records_per_file=max_records_per_file)
     rows = mf.dir_file_rows(out_dir)
@@ -185,14 +189,10 @@ def _write_export_sidecar(out_dir, rows, blooms, bloom_col,
     import pyarrow.parquet as pq
 
     files = sorted(rows)
-    # an EMPTY shard (a partition the gate emptied) has no rows for
-    # the bloom pass to see; its bitmap is all zeros — "contains
-    # nothing" is exactly right and prunes every probe
-    zero = [0] * (bloom_bits // 64)
     tab = pa.table({
         "file": pa.array(files, pa.string()),
         "rows": pa.array([rows[f] for f in files], pa.int64()),
-        "bloom": pa.array([blooms.get(f, zero) for f in files],
+        "bloom": pa.array([blooms[f] for f in files],
                           pa.list_(pa.int64())),
         "bloom_col": pa.array([bloom_col] * len(files), pa.string()),
         "bloom_bits": pa.array([bloom_bits] * len(files), pa.int64()),
@@ -277,21 +277,16 @@ def takedown_from_export(
     probes = spark.createDataFrame([(i,) for i in ids],
                                    f"{id_col} long")
     p = probes.select(
-        id_col,
-        *[F.pmod(F.xxhash64(F.col(id_col), F.lit(i)),
-                 F.lit(bloom_bits)).alias(f"__p{i}")
-          for i in range(bloom_hashes)])
-    hits = " AND ".join(
-        f"(shiftright(element_at(bloom, CAST(__p{i} DIV 64 AS INT) + 1), "
-        f"CAST(__p{i} % 64 AS INT)) & 1) = 1"
-        for i in range(bloom_hashes))
+        id_col, *mf._bloom_positions(F.col(id_col), bloom_bits,
+                                     bloom_hashes))
     # crossJoin is |ids| x file-count with the FILE side broadcast —
     # both metadata-sized by the sidecar's contract (exports have no
     # bucket ids to equi-join on, unlike point_lookup_candidates)
     candidates = sorted(
         r["file"] for r in
         p.crossJoin(F.broadcast(side.select("file", "bloom")))
-        .filter(F.expr(hits)).select("file").distinct().collect())
+        .filter(mf._bloom_hits(bloom_hashes)).select("file").distinct()
+        .collect())
     rewritten: list[str] = []
     rows_removed = 0
     for f in candidates:

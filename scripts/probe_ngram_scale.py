@@ -1,13 +1,16 @@
 #!/usr/bin/env python
-"""r14 probe: all-pairs-within-block vs shared-shingle inverted index
-for exact n-gram Jaccard, as BLOCK SIZE grows.
+"""Scale probe for exact n-gram Jaccard (``ngram_jaccard_pairs``) as
+BLOCK SIZE grows.
 
-Corpus = sf0.1 documents replicated R times with fresh doc_ids and the
-SAME (source, lang) blocks: block sizes grow R-fold, the all-pairs
-matrix R²-fold, shared-shingle co-occurrences ~R²-fold on duplicated
-shingles only.  Both forms compute identical pair sets (the replicas
-are near-identical docs, so the output is huge and equally sized for
-both — the probe prices the candidate generator, not the answer).
+Corpus = sf0.1 documents replicated R = 1, 2, 4 times with fresh
+doc_ids and the SAME (source, lang) blocks: block sizes grow R-fold
+and shared-shingle co-occurrences ~R²-fold on duplicated shingles.
+The replicas are near-identical docs, so the output is huge — the
+probe prices the candidate generator, not the answer.
+OPTIMIZATION_r14.md §1 has its numbers against the all-pairs form.
+
+Run from repo root:  python scripts/probe_ngram_scale.py
+(env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
 """
 
 from __future__ import annotations
@@ -20,41 +23,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from legate_dataframe_spark.session import get_session  # noqa: E402
+from legate_dataframe_spark.core.caching import release_caches  # noqa: E402
 from legate_dataframe_spark.pipeline.dedup import (  # noqa: E402
     ngram_jaccard_pairs,
-    word_shingles,
 )
-from legate_dataframe_spark.core.caching import (  # noqa: E402
-    release_caches,
-    tracked_persist,
-)
-from legate_dataframe_spark.core.partitioning import (  # noqa: E402
-    widen_partitions,
-)
-
-
-def allpairs_jaccard(docs, block_cols, text_col="text", id_col="doc_id",
-                     shingle_k=3, threshold=0.3):
-    """The pre-r14 form, verbatim."""
-    base = tracked_persist(widen_partitions(docs).select(
-        *[F.col(c) for c in block_cols],
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(F.col(text_col), shingle_k))
-        .alias("sh"),
-    ))
-    l, r = base.alias("l"), base.alias("r")
-    cond = (F.col("l.id") < F.col("r.id"))
-    for c in block_cols:
-        cond = cond & (F.col(f"l.{c}") == F.col(f"r.{c}"))
-    inter = F.size(F.array_intersect(
-        F.col("l.sh"), F.col("r.sh"))).cast("double")
-    union = (F.size("l.sh") + F.size("r.sh")).cast("double") - inter
-    jac = F.when(union > 0, F.round(inter / union, 6))
-    return (l.join(r, cond).withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select(F.col("l.id").alias("id_a"),
-                    F.col("r.id").alias("id_b"), "jaccard"))
+from legate_dataframe_spark.session import get_session  # noqa: E402
 
 
 def main() -> None:
@@ -71,17 +44,15 @@ def main() -> None:
                   .select((F.col("doc_id") + F.col("__r") * nmax)
                           .alias("doc_id"), "source", "lang", "text")
                   .localCheckpoint(eager=True))
-        for name, fn in (("allpairs", allpairs_jaccard),
-                         ("inverted", ngram_jaccard_pairs)):
-            df = fn(corpus, ["source", "lang"], threshold=0.3)
-            agg = df.groupBy().agg(F.count(F.lit(1)), F.sum("jaccard"))
-            spark.sparkContext.setJobDescription(f"ngram:{name}@x{r}")
-            t0 = time.perf_counter()
-            row = agg.collect()[0]
-            dt = time.perf_counter() - t0
-            print(f"x{r} {name}: {dt:.2f}s pairs={row[0]}", flush=True)
-            release_caches()
-            spark.sparkContext.setJobDescription(None)
+        df = ngram_jaccard_pairs(corpus, ["source", "lang"], threshold=0.3)
+        agg = df.groupBy().agg(F.count(F.lit(1)), F.sum("jaccard"))
+        spark.sparkContext.setJobDescription(f"ngram:inverted@x{r}")
+        t0 = time.perf_counter()
+        row = agg.collect()[0]
+        dt = time.perf_counter() - t0
+        print(f"x{r} inverted: {dt:.2f}s pairs={row[0]}", flush=True)
+        release_caches()
+        spark.sparkContext.setJobDescription(None)
 
 
 if __name__ == "__main__":

@@ -39,22 +39,31 @@ def test_minhash_lsh_finds_near_dup(docs):
     assert all(p[0] != 4 and p[1] != 4 for p in got)  # unrelated doc absent
 
 
-def test_minhash_bucket_cap_skips_boilerplate_cluster(spark):
+_STORY = "a very specific story about a fox crossing a frozen river at dawn"
+
+
+@pytest.mark.parametrize("pairs, near", [
+    (lambda df, **kw: dedup.minhash_lsh_pairs(df, jaccard_threshold=0.5,
+                                              **kw),
+     _STORY.replace("dawn", "dusk")),
+    # one appended word moves the SimHash by 1 bit (the dusk edit moves
+    # it by 7, past max_hamming=3)
+    (lambda df, **kw: dedup.simhash_pairs(df, max_hamming=3, **kw),
+     _STORY + " today"),
+], ids=["minhash_lsh_pairs", "simhash_pairs"])
+def test_minhash_bucket_cap_skips_boilerplate_cluster(spark, pairs, near):
     # 12 copies of one template + 1 genuine near-dup pair elsewhere:
     # with max_bucket_size the template's O(k²) pairs disappear while
     # the small cluster survives.
     tmpl = "standard legal boilerplate footer text repeated on every page exactly"
-    a = "a very specific story about a fox crossing a frozen river at dawn"
-    b = a.replace("dawn", "dusk")
-    rows = [(i, tmpl) for i in range(12)] + [(100, a), (101, b)]
+    rows = [(i, tmpl) for i in range(12)] + [(100, _STORY), (101, near)]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    capped = dedup.minhash_lsh_pairs(df, jaccard_threshold=0.5,
-                                     max_bucket_size=4).collect()
+    capped = pairs(df, max_bucket_size=4).collect()
     got = {(r["id_a"], r["id_b"]) for r in capped}
     assert got == {(100, 101)}
     # uncapped finds the full template clique too
-    full = dedup.minhash_lsh_pairs(df, jaccard_threshold=0.5).collect()
-    assert len(full) == 12 * 11 // 2 + 1
+    full = [(r["id_a"], r["id_b"]) for r in pairs(df).collect()]
+    assert len(full) == 12 * 11 // 2 + 1 and (100, 101) in full
 
 
 def test_ngram_jaccard_pairs(docs):

@@ -6,11 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from legate_dataframe_spark.pipeline.dedup import (
-    _bloom_hits_sql,
-    _bloom_position_cols,
-    bloom_bitmap,
-)
+from legate_dataframe_spark.core.manifest import _bloom_hits, _bloom_positions
+from legate_dataframe_spark.pipeline.dedup import bloom_bitmap
 from legate_dataframe_spark.pipeline.graph import triangle_counts
 
 
@@ -20,10 +17,9 @@ def test_bloom_no_false_negatives(spark):
     digs = spark.range(0, 500).select(F.md5(F.col("id").cast("string"))
                                       .alias("dig"))
     bm = bloom_bitmap(digs, m_bits=1 << 12, n_hashes=3)
-    probed = (digs.select("dig", *_bloom_position_cols(F.col("dig"),
-                                                       1 << 12, 3))
+    probed = (digs.select("dig", *_bloom_positions(F.col("dig"), 1 << 12, 3))
               .join(F.broadcast(bm))
-              .filter(F.expr(_bloom_hits_sql(3))))
+              .filter(_bloom_hits(3)))
     assert probed.count() == 500
 
 
@@ -35,10 +31,9 @@ def test_bloom_prunes_non_members(spark):
     probes = spark.range(10_000, 11_000).select(
         F.md5(F.col("id").cast("string")).alias("dig"))
     bm = bloom_bitmap(members, m_bits=1 << 14, n_hashes=3)
-    hits = (probes.select("dig", *_bloom_position_cols(F.col("dig"),
-                                                       1 << 14, 3))
+    hits = (probes.select("dig", *_bloom_positions(F.col("dig"), 1 << 14, 3))
             .join(F.broadcast(bm))
-            .filter(F.expr(_bloom_hits_sql(3)))
+            .filter(_bloom_hits(3))
             .count())
     assert hits < 50  # << 1000; generous bound keeps the test stable
 

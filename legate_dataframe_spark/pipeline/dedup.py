@@ -238,7 +238,6 @@ def _jaccard_verify(cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
         .filter(F.col("jaccard") >= threshold)
         .select(a, b, "jaccard")
     )
-    return sh, buckets
 
 
 def minhash_lsh_pairs(

@@ -55,45 +55,6 @@ def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
 
 
-def replace_bucketed(
-    spark: SparkSession,
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Replace a bucketed table with a NEW GENERATION derived from it —
-    the write-back step of incremental maintenance (VERDICT r06
-    "What's missing" #1: merges returned the updated state but never
-    persisted it, so batch N+1 could never see batch N's work).
-
-    Spark cannot overwrite a bucketed table that the plan being
-    written is simultaneously reading (the scan would see its own
-    truncation), so the swap is two-phase and bucket-spec-preserving:
-
-    1. materialize ``df`` into ``{table}__next`` with the SAME bucket
-       spec (``bucketBy`` + ``sortBy``) — the old generation is still
-       live and readable while this executes;
-    2. drop the old generation and ``ALTER TABLE .. RENAME`` the new
-       one into place.  Rename is a catalog-metadata operation; the
-       bucket spec rides along, so every later read of ``table_name``
-       still plans co-located, Exchange-free scans (asserted by the
-       round-7 chain queries).
-
-    On a production lakehouse the same two-phase shape is what table
-    formats call a snapshot commit; plain Spark catalogs give us the
-    drop+rename window instead of an atomic pointer swap — acceptable
-    for a single-writer maintenance job, which is the regime every
-    incremental_* operator here documents.
-    """
-    nxt = f"{table_name}__next"
-    spark.sql(f"DROP TABLE IF EXISTS {nxt}")
-    _write_generation(spark, df, nxt, bucket_cols, num_buckets, sort_cols)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    spark.sql(f"ALTER TABLE {nxt} RENAME TO {table_name}")
-
-
 def _write_generation(
     spark: SparkSession,
     df: DataFrame,
@@ -108,7 +69,7 @@ def _write_generation(
     # repartition(n, cols) uses the same Murmur3-pmod assignment as
     # Spark's bucket id, so each task holds exactly one bucket → one
     # file per bucket per generation (this is also what makes
-    # replace_bucketed double as the index COMPACTION primitive).
+    # swap_versioned double as the index COMPACTION primitive).
     #
     # autoBucketedScan must be pinned OFF for the write: when df reads
     # the table being replaced, the planner first drops the repartition
@@ -310,7 +271,8 @@ def init_versioned(
 
 def _retire_legacy_table(spark: SparkSession, view_name: str) -> None:
     """Migration from the pre-versioned layout (ADVICE r09): if the
-    name is currently a plain TABLE (a replace_bucketed-era index),
+    name is currently a plain TABLE (an index written before the
+    versioned layout, or a user ``write_bucketed`` table),
     CREATE OR REPLACE VIEW would throw AFTER the generation was
     already written; retire the legacy table so the versioned lineage
     takes over the name.  One-time per table — afterwards the name is
@@ -867,8 +829,8 @@ def swap_versioned(
     manifest: bool | dict = False,
     committed_at: str | None = None,
 ) -> None:
-    """ATOMIC generation swap (VERDICT r07 task 8): the plain
-    :func:`replace_bucketed` drop+rename leaves a reader-visible gap
+    """ATOMIC generation swap (VERDICT r07 task 8): a plain
+    drop+rename swap leaves a reader-visible gap
     where ``table_name`` names nothing — a concurrent read in that
     window errors.  Here the new generation is written to a fresh
     versioned physical table ``{view}__g{n+1}`` while the old one

@@ -52,7 +52,6 @@ cpp/src/core/parquet.cpp) — this is the Spark-native analogue of the
 
 from __future__ import annotations
 
-import os
 import re
 from collections.abc import Sequence
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -576,7 +576,7 @@ def incremental_rollup_overwrite(
 ) -> str:
     """Merge a batch into a day-partitioned rollup by DYNAMIC PARTITION
     OVERWRITE — the second write-back mechanism next to
-    core/bucketing.py::replace_bucketed, and at 100 TB usually the
+    core/bucketing.py::swap_versioned, and at 100 TB usually the
     better one for time-keyed state: only the day partitions the batch
     touches are read (Spark's dynamic partition pruning injects the
     touched-day filter into the state scan — asserted by the round-7

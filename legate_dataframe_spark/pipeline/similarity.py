@@ -1,18 +1,43 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — broadcast the (small) query set,
-scan the corpus once, rank per query with a window.  At 100 TB the
-corpus side stays partitioned (never collected/shuffled); cost is one
-scan × |Q| dot products, all inside codegen'd SQL expressions.
+Every search is the prune → exact score → per-query top-k pipeline of
+distributed similarity search, and each stage has one implementation
+that every operator calls:
 
-Scale path: IVF — assign every vector to its nearest centroid (one
-broadcast join against k centroids), then search only within the
-probed cluster(s): turns full scans into cluster-pruned scans.  An
-LSH-bucketed variant (random-hyperplane signs) gives the same effect
-for cosine similarity without training.
+  assign     (assign_with_payload) — nearest centroid per vector as a
+             map-side-combined max of (rounded cosine, −centroid id):
+             ties go to the lowest id, the corpus shuffles once and
+             payload columns ride along.  ivf_assign is it with no
+             payload; kmeans_refine, semantic_dedup and the persisted
+             IVF index (build/insert/retrain) call it.
+  probe      (_probe_n, _probed) — each query's n_probe nearest
+             centroids, then the corpus rows assigned to them joined
+             to the broadcast queries, self dropped, one score column
+             per caller: cosine (ivf_search) or the integer code dot
+             product (ivf_sq_search).  ivfpq_search probes over PQ
+             codes instead.
+  ADC        (_adc_topk) — per-query PQ distance table (|q|·m·k rows,
+             broadcast), code lookup, Σ d2 per (query, candidate):
+             pq_adc_search over every code, ivfpq_search over the
+             probed clusters' codes.
+  rerank     (_shortlist_rerank) — a cheap first score shortlists,
+             then exact cosine over the float vectors of the shortlist
+             rows only: hamming_rerank_topk, matryoshka_topk.
+  top-n      (_top_n) — the one per-group ranking: row_number over an
+             order that ends in an id (so it is total), kept while
+             ≤ n.  Every search, probe, codebook assignment, dedup
+             representative and k-NN vote ranks through it.
+  pack       (_pack, _lloyd_mean) — per-position rows → one ordered
+             array per group: the Lloyd mean of kmeans_refine,
+             pq_train and retrain_ivf_index, and the per-dimension
+             stats of sq_quantize and standardize_embeddings.
 
-All arithmetic casts float32 → double first so results are
-reproducible across engines (and match the DuckDB oracle).
+cosine_neardup_pairs is the exception: its candidates come from
+pipeline/dedup.py's banded self-join.
+
+All arithmetic casts float32 → double first, and scores round at 6
+places, so results are reproducible across engines (and match the
+DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -102,11 +127,18 @@ def brute_force_topk(
         .select("q_id", "c_id",
                 F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_n(sims, "q_id", [F.desc("cos_sim"), "c_id"], k)
+
+
+def _top_n(df: DataFrame, keys: str | list[str], order: list,
+           n: int) -> DataFrame:
+    """The one per-group ranking: ``rank`` (BIGINT) = row_number over
+    ``order`` within ``keys``, kept while ≤ ``n``.  ``order`` ends in
+    an id column, so the order is total and the result deterministic
+    in any engine; callers that do not return the rank drop it."""
+    w = W.partitionBy(keys).orderBy(order)
+    return (df.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= n))
 
 
 def ivf_assign(
@@ -114,26 +146,11 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine (IVF build
-    step).  Centroids are broadcast; one corpus scan, no shuffle of the
-    corpus itself."""
-    cen = centroids.select(F.col(centroid_id_col).alias("cent_id"),
-                           F.col(vec_col).alias("cent_vec"))
-    scored = (
-        widen_partitions(corpus).select(F.col(id_col), F.col(vec_col))
-        .crossJoin(F.broadcast(cen))
-        .select(id_col,
-                "cent_id",
-                F.round(cosine(F.col(vec_col), F.col("cent_vec")), 6).alias("cos_sim"))
-    )
-    w = W.partitionBy(id_col).orderBy(F.col("cos_sim").desc(), F.col("cent_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col(id_col), F.col("cent_id").alias(centroid_id_col), "cos_sim")
-    )
+    step) → (id, centroid_id, cos_sim): ``assign_with_payload`` with
+    no payload.  Centroids are broadcast; one corpus scan."""
+    return assign_with_payload(corpus, centroids, [], id_col, vec_col)
 
 
 def kmeans_refine(
@@ -148,9 +165,9 @@ def kmeans_refine(
     vectors (deterministic init — no RNG, reproducible anywhere).
 
     Each iteration is fully distributed: one broadcast-centroid
-    assignment pass over the corpus (``ivf_assign``: no corpus
-    shuffle), then an element-wise mean via posexplode + groupBy
-    (shuffles k×dim rows, not the corpus).  ``localCheckpoint``
+    assignment pass over the corpus (``assign_with_payload``), then
+    the element-wise mean ``_lloyd_mean`` (shuffles k×dim rows, not
+    the corpus).  ``localCheckpoint``
     truncates lineage per iteration like pipeline/components.py.
     Means are rounded to 6 decimals each iteration so the refinement
     is bit-reproducible across engines (the DuckDB oracle unrolls the
@@ -166,24 +183,40 @@ def kmeans_refine(
         # ITERATION (review r03); tie semantics are identical
         joined = assign_with_payload(corpus, cen, [vec_col],
                                      id_col, vec_col)
-        expl = joined.select(
-            "centroid_id",
-            F.posexplode(_to_double(F.col(vec_col))).alias("pos", "val"))
-        # round(avg,6) RETAINED (r06 boundary-flap audit): the per-
-        # iteration rounding IS the cross-engine reproducibility
-        # mechanism — the oracle unrolls the same rounded iterations,
-        # and an integerized mean would change every downstream
-        # centroid/assignment value.  Residual risk (a mean landing
-        # within an ulp of a .5e-6 boundary) is caught pre-driver by
-        # the per-round full-registry strict_parity sweep.
-        means = (expl.groupBy("centroid_id", "pos")
-                 .agg(F.round(F.avg("val"), 6).alias("m")))
-        cen = (means.groupBy("centroid_id")
-               .agg(F.transform(
-                   F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                   lambda s: s["m"]).alias(vec_col)))
+        cen = _lloyd_mean(joined, ["centroid_id"],
+                          _to_double(F.col(vec_col)), vec_col)
         cen = cen.localCheckpoint(eager=True)
     return cen
+
+
+def _pack(df: DataFrame, keys: list[str], **out: str) -> DataFrame:
+    """Per-position rows (keys…, pos, values…) → one row per ``keys``
+    group holding, for each ``out`` name, the array of its value
+    column in ``pos`` order.  One collect_list of (pos, values…)
+    structs, sorted once, feeds every output array."""
+    ps = F.array_sort(F.collect_list(F.struct("pos", *out.values())))
+    return (df.groupBy(*keys).agg(ps.alias("ps"))
+            .select(*keys, *[F.transform("ps", lambda s: s[v]).alias(name)
+                             for name, v in out.items()]))
+
+
+def _lloyd_mean(assigned: DataFrame, keys: list[str], vec: Column,
+                out: str) -> DataFrame:
+    """The one Lloyd update: per ``keys`` group, the element-wise mean
+    of ``vec`` → (keys…, out array<double>).  Shuffles groups×dim
+    scalar rows, never the vectors.
+
+    round(avg,6) RETAINED (r06 boundary-flap audit): the per-iteration
+    rounding IS the cross-engine reproducibility mechanism — the
+    oracles unroll the same rounded iterations, and an integerized
+    mean would change every downstream centroid/assignment value.
+    Residual risk (a mean landing within an ulp of a .5e-6 boundary)
+    is caught pre-driver by the per-round full-registry strict_parity
+    sweep."""
+    expl = assigned.select(*keys, F.posexplode(vec).alias("pos", "val"))
+    means = (expl.groupBy(*keys, "pos")
+             .agg(F.round(F.avg("val"), 6).alias("m")))
+    return _pack(means, keys, **{out: "m"})
 
 
 def ivf_search(
@@ -194,31 +227,20 @@ def ivf_search(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
 ) -> DataFrame:
     """ANN search: probe the ``n_probe`` nearest clusters per query,
     brute-force within them.  ``corpus_assigned`` = corpus joined with
     its ``ivf_assign`` output (carries centroid_id)."""
-    q_probe = (
-        ivf_assign(queries, centroids, id_col, vec_col, centroid_id_col)
-        .select(F.col(id_col).alias("q_id"),
-                F.col(centroid_id_col).alias("cent_id"))
-    ) if n_probe == 1 else _probe_n(queries, centroids, n_probe, id_col, vec_col)
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    cand = (
-        corpus_assigned.join(q_probe.withColumnRenamed("cent_id", centroid_id_col),
-                             on=centroid_id_col)
-        .join(F.broadcast(q), on="q_id")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select("q_id", F.col(id_col).alias("c_id"),
-                F.round(cosine(F.col("q_vec"), F.col(vec_col)), 6).alias("cos_sim"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id"))
-    return cand.withColumn("rank", F.row_number().over(w).cast("long")) \
-               .filter(F.col("rank") <= k)
+    cand = _probed(corpus_assigned, centroids, queries,
+                   F.col(vec_col).alias("q_vec"),
+                   F.round(cosine(F.col("q_vec"), F.col(vec_col)), 6)
+                   .alias("cos_sim"), n_probe, id_col, vec_col)
+    return _top_n(cand, "q_id", [F.desc("cos_sim"), "c_id"], k)
 
 
 def _probe_n(queries, centroids, n_probe, id_col, vec_col):
+    """(q_id, cent_id) of each query's ``n_probe`` nearest centroids
+    (rounded cosine desc, centroid id asc)."""
     cen = centroids.select(F.col("centroid_id").alias("cent_id"),
                            F.col(vec_col).alias("cent_vec"))
     scored = (
@@ -227,9 +249,25 @@ def _probe_n(queries, centroids, n_probe, id_col, vec_col):
         .select("q_id", "cent_id",
                 F.round(cosine(F.col(vec_col), F.col("cent_vec")), 6).alias("cs"))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cs").desc(), F.col("cent_id"))
-    return scored.withColumn("rn", F.row_number().over(w)) \
-                 .filter(F.col("rn") <= n_probe).select("q_id", "cent_id")
+    return (_top_n(scored, "q_id", [F.desc("cs"), "cent_id"], n_probe)
+            .select("q_id", "cent_id"))
+
+
+def _probed(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
+            q_val: Column, score: Column, n_probe: int,
+            id_col: str, vec_col: str) -> DataFrame:
+    """IVF candidates → (q_id, c_id, score): every ``corpus`` row
+    (carrying centroid_id) in one of the query's ``n_probe`` nearest
+    clusters, joined to the broadcast queries' ``q_val``, self
+    excluded.  The probe-key join is the one a bucketed assignment
+    table serves co-located."""
+    probe = (_probe_n(queries, centroids, n_probe, id_col, vec_col)
+             .withColumnRenamed("cent_id", "centroid_id"))
+    q = queries.select(F.col(id_col).alias("q_id"), q_val)
+    return (corpus.join(probe, "centroid_id")
+            .join(F.broadcast(q), "q_id")
+            .filter(F.col(id_col) != F.col("q_id"))
+            .select("q_id", F.col(id_col).alias("c_id"), score))
 
 
 def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
@@ -367,20 +405,8 @@ def pq_train(
                       id_col, vec_col) \
         .select("sub_id", F.col("id").alias("cid"), F.col("sv").alias("cv"))
     for _ in range(n_iter):
-        assigned = _pq_assign(sub, cen)
-        expl = (assigned.join(sub, ["id", "sub_id"])
-                .select("sub_id", "cid",
-                        F.posexplode("sv").alias("pos", "val")))
-        # round(avg,6) RETAINED — same rationale as kmeans_refine: the
-        # rounding is the codebook's cross-engine reproducibility
-        # contract (oracle unrolls it); flap window covered by the
-        # per-round strict_parity sweep.
-        means = (expl.groupBy("sub_id", "cid", "pos")
-                 .agg(F.round(F.avg("val"), 6).alias("mv")))
-        cen = (means.groupBy("sub_id", "cid")
-               .agg(F.transform(
-                   F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                   lambda s: s["mv"]).alias("cv")))
+        assigned = _pq_assign(sub, cen).join(sub, ["id", "sub_id"])
+        cen = _lloyd_mean(assigned, ["sub_id", "cid"], F.col("sv"), "cv")
         cen = cen.localCheckpoint(eager=True)
     return cen
 
@@ -390,9 +416,7 @@ def _pq_assign(sub: DataFrame, cen: DataFrame) -> DataFrame:
     (broadcast codebook; ties break on lowest cid)."""
     scored = (sub.join(F.broadcast(cen), "sub_id")
               .withColumn("d2", _l2sq(F.col("sv"), F.col("cv"))))
-    w = W.partitionBy("id", "sub_id").orderBy("d2", "cid")
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+    return (_top_n(scored, ["id", "sub_id"], ["d2", "cid"], 1)
             .select("id", "sub_id", "cid"))
 
 
@@ -427,6 +451,18 @@ def pq_adc_search(
     join with the corpus CODES on (sub_id, code) and a sum per
     (q_id, c_id).  Raw corpus vectors are never touched at query time
     — work scales with |codes|, not |corpus|·dim."""
+    return _adc_topk(codes.withColumnRenamed("id", "c_id"), ["sub_id", "code"],
+                     codebooks, queries, topk, m, dim, id_col, vec_col)
+
+
+def _adc_topk(cand: DataFrame, on: list[str], codebooks: DataFrame,
+              queries: DataFrame, topk: int, m: int, dim: int,
+              id_col: str, vec_col: str) -> DataFrame:
+    """The ADC stage → (q_id, c_id, approx_d2, rank): build each
+    query's m×k distance table against the codebooks, look up every
+    candidate code row ``cand`` (c_id, sub_id, code, [q_id]) in it on
+    ``on``, sum d2 per (q_id, c_id), drop self, keep the ``topk``
+    nearest (approx_d2 asc, c_id asc)."""
     qsub = _subvectors(queries, m, dim, id_col, vec_col) \
         .select(F.col("id").alias("q_id"), "sub_id", "sv")
     dtab = (qsub.join(F.broadcast(codebooks), "sub_id")
@@ -435,16 +471,11 @@ def pq_adc_search(
     # dtab is |q|·m·k rows — broadcast it so the (huge) code table
     # never shuffles; same query-side-small assumption as
     # brute_force_topk
-    scored = (codes.withColumnRenamed("id", "c_id")
-              .join(F.broadcast(dtab), ["sub_id", "code"])
+    scored = (cand.join(F.broadcast(dtab), on)
               .groupBy("q_id", "c_id")
               .agg(F.round(F.sum("d2"), 6).alias("approx_d2")))
     scored = scored.filter(F.col("q_id") != F.col("c_id"))
-    w = W.partitionBy("q_id").orderBy("approx_d2", "c_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= topk)
-            .select("q_id", "c_id", "approx_d2",
-                    F.col("rank").cast("long").alias("rank")))
+    return _top_n(scored, "q_id", ["approx_d2", "c_id"], topk)
 
 
 def ivfpq_search(
@@ -474,24 +505,12 @@ def ivfpq_search(
         .select(F.col(id_col).alias("c_id"),
                 F.col("centroid_id").alias("cent_id"))
     probe = _probe_n(queries, coarse_centroids, n_probe, id_col, vec_col)
-    qsub = _subvectors(queries, m, dim, id_col, vec_col) \
-        .select(F.col("id").alias("q_id"), "sub_id", "sv")
-    dtab = (qsub.join(F.broadcast(codebooks), "sub_id")
-            .select("q_id", "sub_id", F.col("cid").alias("code"),
-                    _l2sq(F.col("sv"), F.col("cv")).alias("d2")))
     # candidate codes: corpus rows whose coarse cluster is probed by q
     cand = (codes.join(assign, "c_id")
             .join(F.broadcast(probe), "cent_id")
             .select("q_id", "c_id", "sub_id", "code"))
-    scored = (cand.join(F.broadcast(dtab), ["q_id", "sub_id", "code"])
-              .groupBy("q_id", "c_id")
-              .agg(F.round(F.sum("d2"), 6).alias("approx_d2")))
-    scored = scored.filter(F.col("q_id") != F.col("c_id"))
-    w = W.partitionBy("q_id").orderBy("approx_d2", "c_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= topk)
-            .select("q_id", "c_id", "approx_d2",
-                    F.col("rank").cast("long").alias("rank")))
+    return _adc_topk(cand, ["q_id", "sub_id", "code"], codebooks, queries,
+                     topk, m, dim, id_col, vec_col)
 
 
 def semantic_dedup(
@@ -511,7 +530,7 @@ def semantic_dedup(
 
     Shape at scale: the defining trick of SemDeDup is that pairwise
     comparison happens only WITHIN a cluster — assignment is one
-    broadcast-centroid pass (no corpus shuffle, see ``ivf_assign``),
+    broadcast-centroid pass (see ``assign_with_payload``),
     and the pair join is an equi-join keyed by centroid_id, never
     all-pairs.  Work is Σ|cluster|² instead of N²; at 100 TB you raise
     k so clusters stay bounded (k ≈ N/10k keeps buckets ~10k rows).
@@ -541,9 +560,7 @@ def semantic_dedup(
                 .alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
-    w = W.partitionBy("dup_id").orderBy(F.col("keep_id"))
-    return (pairs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+    return (_top_n(pairs, "dup_id", ["keep_id"], 1)
             .select(F.col("dup_id").alias(id_col), "centroid_id",
                     F.col("keep_id").alias("dup_of"), "cos_sim"))
 
@@ -567,16 +584,10 @@ def sq_quantize(
         F.posexplode(_to_double(F.col(vec_col))).alias("pos", "val"))
     # dim-sized (1 row); persist so corpus/query branches both reading
     # the quantized frame don't re-scan the corpus for the stats
-    stats = tracked_persist(
+    stats = tracked_persist(_pack(
         expl.groupBy("pos")
-        .agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
-        .groupBy()
-        .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("pos", "mn"))),
-                 lambda s: s["mn"]).alias("mns"),
-             F.transform(
-                 F.array_sort(F.collect_list(F.struct("pos", "mx"))),
-                 lambda s: s["mx"]).alias("mxs")))
+        .agg(F.min("val").alias("mn"), F.max("val").alias("mx")),
+        [], mns="mn", mxs="mx"))
     v = _to_double(F.col(vec_col))
     code = F.zip_with(
         v, F.sequence(F.lit(0), F.size(v) - 1),
@@ -600,13 +611,6 @@ def int_dot(a: Column, b: Column) -> Column:
         F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
-def _per_query_topk(cand: DataFrame, score_col: str, k: int) -> DataFrame:
-    """Deterministic per-query top-k: (score desc, c_id asc) tiebreak."""
-    w = W.partitionBy("q_id").orderBy(F.col(score_col).desc(), F.col("c_id"))
-    return (cand.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k))
-
-
 def assign_with_payload(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -619,9 +623,10 @@ def assign_with_payload(
     map-side-combined groupBy (max of a (cos, −cent_id) struct — the
     partial aggregate collapses the ×k scored rows to one per vector
     BEFORE the shuffle), so the corpus crosses the wire exactly once,
-    payload included.  ``ivf_assign`` + a corpus-sized re-join needs
-    two corpus shuffles for the same result (review r03); tie
-    semantics are identical (rounded cosine desc, centroid id asc).
+    payload included; an assignment + corpus-sized re-join on id
+    would need two corpus shuffles for the same result (review r03).
+    Ties go to the lower centroid id: the order is rounded cosine
+    desc, centroid id asc, the same as ``_probe_n``'s.
     Payload values ride ``F.first`` — deterministic because every
     scored copy of a vector carries the same payload.
 
@@ -670,7 +675,7 @@ def sq_topk(
               .select("q_id", F.col(id_col).alias("c_id"),
                       int_dot(F.col("codes"), F.col("q_codes"))
                       .alias("iprod")))
-    return _per_query_topk(scored, "iprod", k)
+    return _top_n(scored, "q_id", [F.desc("iprod"), "c_id"], k)
 
 
 def ivf_sq_search(
@@ -694,18 +699,11 @@ def ivf_sq_search(
     vector (broadcast centroids), scoring is the pure-BIGINT code dot
     product, so the result stays float-tolerance-free.
     """
-    q_probe = _probe_n(queries, centroids, n_probe, id_col, vec_col)
-    q = queries.select(F.col(id_col).alias("q_id"),
-                       F.col("codes").alias("q_codes"))
-    cand = (corpus_codes
-            .join(q_probe.withColumnRenamed("cent_id", "centroid_id"),
-                  "centroid_id")
-            .join(F.broadcast(q), "q_id")
-            .filter(F.col(id_col) != F.col("q_id"))
-            .select("q_id", F.col(id_col).alias("c_id"),
-                    int_dot(F.col("codes"), F.col("q_codes"))
-                    .alias("iprod")))
-    return _per_query_topk(cand, "iprod", k)
+    cand = _probed(corpus_codes, centroids, queries,
+                   F.col("codes").alias("q_codes"),
+                   int_dot(F.col("codes"), F.col("q_codes")).alias("iprod"),
+                   n_probe, id_col, vec_col)
+    return _top_n(cand, "q_id", [F.desc("iprod"), "c_id"], k)
 
 
 def standardize_embeddings(
@@ -738,11 +736,7 @@ def standardize_embeddings(
     per_dim = (dims.groupBy("pos")
                .agg(F.round(F.avg("x"), 6).alias("mu"),
                     F.round(F.stddev_pop("x"), 6).alias("sd")))
-    stats = (per_dim.groupBy()
-             .agg(F.array_sort(F.collect_list(
-                 F.struct("pos", "mu", "sd"))).alias("ps"))
-             .select(F.transform("ps", lambda s: s["mu"]).alias("mus"),
-                     F.transform("ps", lambda s: s["sd"]).alias("sds")))
+    stats = _pack(per_dim, [], mus="mu", sds="sd")
     std = F.transform(
         v,
         lambda x, i: (x - F.get(F.col("mus"), i))
@@ -819,19 +813,27 @@ def hamming_rerank_topk(
     cand = (c.crossJoin(F.broadcast(q))
             .filter(F.col("c_id") != F.col("q_id"))
             .select("q_id", "c_id", ham.cast("long").alias("hamming")))
-    w = W.partitionBy("q_id").orderBy("hamming", "c_id")
-    short = (cand.withColumn("hrank", F.row_number().over(w))
-             .filter(F.col("hrank") <= shortlist)
-             .select("q_id", "c_id", "hamming"))
+    return _shortlist_rerank(cand, ["hamming", "c_id"], shortlist,
+                             corpus, queries, k, id_col, vec_col)
+
+
+def _shortlist_rerank(cand: DataFrame, order: list, shortlist: int,
+                      corpus: DataFrame, queries: DataFrame, k: int,
+                      id_col: str, vec_col: str) -> DataFrame:
+    """Two-stage tail: keep each query's ``shortlist`` best ``cand``
+    rows (q_id, c_id, first score) by ``order``, fetch the float
+    vectors for those rows only, and return the exact-cosine top-k
+    with the first score carried."""
+    short = _top_n(cand, "q_id", order, shortlist).drop("rank")
     # fetch float vectors for shortlist rows only (AQE broadcasts the
     # shortlist side of both joins)
     cv = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"))
     qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
     scored = (short.join(cv, "c_id").join(F.broadcast(qv), "q_id")
-              .select("q_id", "c_id", "hamming",
+              .select(*short.columns,
                       F.round(cosine(F.col("cv"), F.col("qv")), 6)
                       .alias("cos_sim")))
-    return _per_query_topk(scored, "cos_sim", k)
+    return _top_n(scored, "q_id", [F.desc("cos_sim"), "c_id"], k)
 
 
 def matryoshka_topk(
@@ -859,17 +861,8 @@ def matryoshka_topk(
               .select("q_id", "c_id",
                       F.round(cosine(F.col("c_pre"), F.col("q_pre")), 6)
                       .alias("pre_sim")))
-    w = W.partitionBy("q_id").orderBy(F.col("pre_sim").desc(), "c_id")
-    short = (stage1.withColumn("prank", F.row_number().over(w))
-             .filter(F.col("prank") <= shortlist)
-             .select("q_id", "c_id", "pre_sim"))
-    cv = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"))
-    qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-    scored = (short.join(cv, "c_id").join(F.broadcast(qv), "q_id")
-              .select("q_id", "c_id", "pre_sim",
-                      F.round(cosine(F.col("cv"), F.col("qv")), 6)
-                      .alias("cos_sim")))
-    return _per_query_topk(scored, "cos_sim", k)
+    return _shortlist_rerank(stage1, [F.desc("pre_sim"), "c_id"], shortlist,
+                             corpus, queries, k, id_col, vec_col)
 
 
 def knn_classify(
@@ -900,9 +893,7 @@ def knn_classify(
              .agg(F.count(F.lit(1)).alias("votes"),
                   F.sum(F.round(F.col("cos_sim") * 1e6).cast("long"))
                   .alias("sim_micro_sum")))
-    w = W.partitionBy("q_id").orderBy(F.desc("votes"), F.asc("nbr_label"))
-    pred = (votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+    pred = (_top_n(votes, "q_id", [F.desc("votes"), "nbr_label"], 1)
             .select("q_id", F.col("nbr_label").alias("pred_label"),
                     "votes", "sim_micro_sum"))
     truth = queries.select(F.col(id_col).alias("q_id"),
@@ -950,7 +941,13 @@ def build_ivf_index(
                                    id_col=id_col, vec_col=vec_col)
     init_versioned(spark, assigned, f"{table_prefix}_assign",
                    ["centroid_id"], num_buckets=num_buckets)
-    (centroids.select(F.col("centroid_id"), F.col(vec_col))
+    _write_centroids(centroids, table_prefix, vec_col)
+
+
+def _write_centroids(cen: DataFrame, table_prefix: str,
+                     vec_col: str) -> None:
+    """Overwrite the index's (tiny, plain) ``{prefix}_centroids``."""
+    (cen.select("centroid_id", vec_col)
      .write.format("parquet").mode("overwrite")
      .saveAsTable(f"{table_prefix}_centroids"))
 
@@ -1060,7 +1057,7 @@ def retrain_ivf_index(
     corpus join):
 
     1. new centroids = per-cluster element-wise mean of the STORED
-       assignment (identical arithmetic to ``kmeans_refine``'s
+       assignment (``_lloyd_mean``, the same call as ``kmeans_refine``'s
        iteration body, including the round-6 cross-engine
        reproducibility contract — the stored assignment IS the
        current-centroid assignment, so one retrain ≡ one Lloyd
@@ -1080,24 +1077,15 @@ def retrain_ivf_index(
     )
 
     assigned = read_bucketed(spark, f"{table_prefix}_assign")
-    expl = assigned.select(
-        "centroid_id",
-        F.posexplode(_to_double(F.col(vec_col))).alias("pos", "val"))
-    means = (expl.groupBy("centroid_id", "pos")
-             .agg(F.round(F.avg("val"), 6).alias("m")))
-    cen = (means.groupBy("centroid_id")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("pos", "m"))),
-               lambda s: s["m"]).alias(vec_col))
+    cen = (_lloyd_mean(assigned, ["centroid_id"],
+                       _to_double(F.col(vec_col)), vec_col)
            .localCheckpoint(eager=True))  # severed from both tables
     new_assign = assign_with_payload(
         assigned.select(id_col, vec_col), cen, [vec_col],
         id_col=id_col, vec_col=vec_col)
     swap_versioned(spark, new_assign, f"{table_prefix}_assign",
                    ["centroid_id"], num_buckets=num_buckets)
-    (cen.select("centroid_id", vec_col)
-     .write.format("parquet").mode("overwrite")
-     .saveAsTable(f"{table_prefix}_centroids"))
+    _write_centroids(cen, table_prefix, vec_col)
 
 
 def insert_into_ivf_index(

@@ -462,28 +462,40 @@ def bm25_topk(
     dl = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     tf = (tok.filter(F.col("tok").isin(terms))
           .groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf")))
-    df_ = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     # round(avg,6) SAFE here (r06 boundary-flap audit): dl is an
     # integer token count, so avg = exact BIGINT sum ÷ count — one
     # IEEE division, order-invariant in both engines.  No flap window.
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
                    F.round(F.avg("dl"), 6).alias("avgdl"))
+    return _bm25_rank(tf.join(dl, id_col), tf, stats, k1, b, topk, id_col)
+
+
+def _bm25_rank(postings: DataFrame, df_from: DataFrame, stats: DataFrame,
+               k1: float, b: float, topk: int, id_col: str) -> DataFrame:
+    """The one BM25 scorer → (id, bm25, rank).  ``postings`` are the
+    query-term rows (id, tok, tf, dl); document frequencies count the
+    rows of ``df_from`` per term; ``stats`` is the 1-row (n_docs,
+    avgdl) table.  Score = round(Σ idf·tf·(k1+1)/(tf + k1·(1 − b +
+    b·dl/avgdl)), 6) with the Robertson/Sparck-Jones idf; the top-k
+    order is (bm25 desc, id asc)."""
+    from pyspark.sql import Window as _W
+
+    df_ = df_from.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5) + 1)
     denom = (F.col("tf")
              + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
     term_score = idf * F.col("tf") * (k1 + 1) / denom
-    scored = (tf.join(dl, id_col)
+    scored = (postings
               .join(F.broadcast(df_), "tok")
               .crossJoin(F.broadcast(stats))
               .groupBy(id_col)
               .agg(F.round(F.sum(term_score), 6).alias("bm25")))
     # orderBy+limit plans as TakeOrderedAndProject (distributed top-k);
     # a global row_number window would single-partition the scored set
-    top = scored.orderBy(F.col("bm25").desc(), id_col).limit(topk)
-    from pyspark.sql import Window as _W
-
-    w = _W.orderBy(F.col("bm25").desc(), id_col)  # topk rows only
+    order = [F.col("bm25").desc(), F.col(id_col)]
+    top = scored.orderBy(*order).limit(topk)
+    w = _W.orderBy(*order)  # topk rows only
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
@@ -907,8 +919,6 @@ def bm25_search_persisted(
     construction: the snapshot can never pair with the wrong stats.
     The derivation is an O(snapshot) aggregate — fine for audit
     reads; the LIVE path keeps its O(1) stats row."""
-    from pyspark.sql import Window as _W
-
     from legate_dataframe_spark.core.bucketing import (
         read_bucketed,
         read_generation,
@@ -929,18 +939,4 @@ def bm25_search_persisted(
             F.sum("dl").alias("sum_dl"))
     postings = (all_postings
                 .filter(F.col("tok").isin(terms)))  # bucket-pruned scan
-    df_ = postings.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1)
-    denom = (F.col("tf")
-             + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    term_score = idf * F.col("tf") * (k1 + 1) / denom
-    scored = (postings
-              .join(F.broadcast(df_), "tok")
-              .crossJoin(F.broadcast(stats))
-              .groupBy(id_col)
-              .agg(F.round(F.sum(term_score), 6).alias("bm25")))
-    top = scored.orderBy(F.col("bm25").desc(), id_col).limit(topk)
-    return top.withColumn(
-        "rank", F.row_number().over(
-            _W.orderBy(F.col("bm25").desc(), id_col)).cast("long"))
+    return _bm25_rank(postings, postings, stats, k1, b, topk, id_col)

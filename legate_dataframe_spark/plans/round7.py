@@ -5,8 +5,8 @@ Two capability groups:
 - **Multi-generation maintenance** (``incremental_rollup_chain``,
   ``incremental_components_chain``): the write-back loop the r06
   persisted-index family left open — batch N's merge is PERSISTED
-  back as the new state (bucket-spec-preserving two-phase swap,
-  core/bucketing.py::replace_bucketed) and batch N+1 merges against
+  back as the new state (bucket-spec-preserving generation swap,
+  core/bucketing.py::swap_versioned) and batch N+1 merges against
   the UPDATED state.  This is the actual production refresh loop;
   r06's queries were one-shot merge demos.  Oracles stay maximal:
   the final output must equal a full recompute over corpus + both
@@ -398,7 +398,7 @@ def incremental_rollup_partitioned(spark: SparkSession,
     """The SECOND write-back mechanism: day-PARTITIONED rollup state
     maintained by DYNAMIC PARTITION OVERWRITE — for time-keyed state
     the production-preferred shape next to the bucketed swap
-    (replace_bucketed rewrites the whole table per generation; the
+    (swap_versioned rewrites the whole table per generation; the
     partitioned form rewrites only the day partitions the batch
     touches, and the overwrite is atomic per partition).
 

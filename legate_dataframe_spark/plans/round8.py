@@ -17,8 +17,8 @@ Two capability groups:
   that was still build-once; postings append + exact avgdl fold) and
   ``rollup_swap_atomic`` (the bucketed generation swap routed through
   a stable VIEW repointed with ``CREATE OR REPLACE VIEW`` — one
-  catalog operation, so a reader never sees the drop+rename gap
-  ``replace_bucketed`` leaves; core/bucketing.py::swap_versioned).
+  catalog operation, so a reader never sees the gap a plain
+  drop+rename swap leaves; core/bucketing.py::swap_versioned).
 
 Catalog hygiene matches round-7: uuid-suffixed session-temp databases
 dropped (CASCADE) before returning.
@@ -389,7 +389,7 @@ COMPONENTS_INDEX_DELETE_SQL = _components_delete_sql()
 # ============================== view-routed ATOMIC generation swap
 def rollup_swap_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rollup chain re-run on the ATOMIC swap mechanism (VERDICT
-    r07 task 8): ``replace_bucketed``'s drop+rename leaves a window
+    r07 task 8): a plain drop+rename swap leaves a window
     where the table name resolves to nothing; here state lives in
     versioned physical tables ``state__g{n}`` (bucketed — the spec
     rides on the physical table) behind a stable VIEW repointed by

@@ -285,7 +285,7 @@ def test_init_versioned_migrates_legacy_plain_table(spark):
 
 
 def test_swap_versioned_migrates_legacy_plain_table(spark):
-    """First swap over a replace_bucketed-era plain table: the swap
+    """First swap over a pre-versioned plain table: the swap
     reads the legacy table, writes __g0 from it, retires the legacy
     table, and repoints the name — the in-place upgrade path every
     rollup-state query now uses."""

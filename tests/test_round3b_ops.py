@@ -326,20 +326,49 @@ def test_pagerank_matches_python_replay(spark):
     assert got[2] > got[3]
 
 
-def test_assign_with_payload_matches_ivf_assign_ties(spark):
-    # tie case: vector equidistant from two centroids must pick the
-    # LOWEST centroid id — the exact ivf_assign window semantics the
-    # single-pass argmax replaced (cos desc, cent_id asc)
+def test_assign_ties_go_to_lowest_centroid_id(spark):
+    # vector 3 is equidistant from both centroids (cos 0.707107 to
+    # each) and must land on the LOWER id; ivf_assign is
+    # assign_with_payload without payload, so both answer the same
     e = _emb(spark, [
-        (3, [1.0, 1.0]),              # cos = 0.707107 to BOTH centroids
+        (3, [1.0, 1.0]),
         (4, [1.0, 0.0]), (5, [0.0, 1.0]),
     ])
     cen = _emb(spark, [(10, [2.0, 0.0]), (11, [0.0, 2.0])]).select(
         F.col("vec_id").alias("centroid_id"), "embedding")
-    got = {r["vec_id"]: (r["centroid_id"], r["cos_sim"])
-           for r in similarity.assign_with_payload(
-               e, cen, ["embedding"]).collect()}
-    want = {r["vec_id"]: (r["centroid_id"], r["cos_sim"])
-            for r in similarity.ivf_assign(e, cen).collect()}
-    assert got == want
-    assert got[3][0] == 10  # tie broken toward the lower centroid id
+    want = {3: (10, 0.707107), 4: (10, 1.0), 5: (11, 1.0)}
+    for out in (similarity.assign_with_payload(e, cen, ["embedding"]),
+                similarity.ivf_assign(e, cen)):
+        got = {r["vec_id"]: (r["centroid_id"], r["cos_sim"])
+               for r in out.collect()}
+        assert got == want
+
+
+def test_multi_probe_ties_keep_lowest_centroid_ids(spark):
+    # the query is equidistant (cos 0.57735) from all three centroids:
+    # n_probe=2 must probe 10 and 11, so vector 120 (cluster 12) is
+    # never a candidate; the tied candidates rank by c_id
+    corpus = _emb(spark, [(100, [1.0, 0.0, 0.0]), (110, [0.0, 1.0, 0.0]),
+                          (120, [0.0, 0.0, 1.0])])
+    cen = _emb(spark, [(10, [1.0, 0.0, 0.0]), (11, [0.0, 1.0, 0.0]),
+                       (12, [0.0, 0.0, 1.0])]).select(
+        F.col("vec_id").alias("centroid_id"), "embedding")
+    q = _emb(spark, [(1, [1.0, 1.0, 1.0])])
+    assigned = similarity.assign_with_payload(corpus, cen, ["embedding"])
+    got = sorted(tuple(r) for r in similarity.ivf_search(
+        assigned, cen, q, k=5, n_probe=2).collect())
+    assert got == [(1, 100, 0.57735, 1), (1, 110, 0.57735, 2)]
+
+
+def test_adc_ties_rank_lower_c_id_first(spark):
+    # corpus 7 and 5 share code 1, so their approx_d2 ties at 0.0:
+    # the ascending rank breaks the tie toward the lower c_id
+    codebooks = spark.createDataFrame(
+        [(0, 0, [0.0, 0.0]), (0, 1, [1.0, 0.0])],
+        "sub_id: int, cid: long, cv: array<double>")
+    codes = spark.createDataFrame([(7, 0, 1), (5, 0, 1), (9, 0, 0)],
+                                  "id: long, sub_id: int, code: long")
+    q = _emb(spark, [(1, [1.0, 0.0])])
+    got = sorted(tuple(r) for r in similarity.pq_adc_search(
+        codes, codebooks, q, topk=3, m=1, dim=2).collect())
+    assert got == [(1, 5, 0.0, 1), (1, 7, 0.0, 2), (1, 9, 1.0, 3)]

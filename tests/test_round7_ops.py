@@ -40,39 +40,6 @@ def temp_db(spark, stem):
         shutil.rmtree(loc, ignore_errors=True)
 
 
-def test_replace_bucketed_preserves_spec_and_values(spark):
-    """The two-phase swap (write __next + drop/rename) must leave a
-    table that (a) holds the new generation's rows and (b) still
-    plans bucket-aware scans — i.e. rename carried the bucket spec."""
-    from legate_dataframe_spark.core.bucketing import (
-        read_bucketed,
-        replace_bucketed,
-        write_bucketed,
-    )
-
-    with temp_db(spark, "ldf_t7_swap") as db:
-        df = spark.range(0, 200).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
-        write_bucketed(df, f"{db}.t", ["k"], num_buckets=4)
-        gen2 = read_bucketed(spark, f"{db}.t").withColumn(
-            "v", F.col("v") + 1)
-        replace_bucketed(spark, gen2, f"{db}.t", ["k"], num_buckets=4)
-        back = read_bucketed(spark, f"{db}.t")
-        assert back.agg(F.sum("v")).collect()[0][0] == \
-            sum(i * 3 + 1 for i in range(200))
-        # bucket spec survived the rename: a keyed join with broadcast
-        # off must read the table's own buckets (no Exchange on it)
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            probe = spark.range(0, 50).select(F.col("id").alias("k"))
-            plan = plan_of(back.join(probe.repartition(4, "k"), "k"),
-                           "formatted")
-            assert "Bucketed: true" in plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_insert_into_minhash_index_matches_fresh_build(spark, sf_dir):
     """build(corpus) + insert(batch) must serve the SAME corpus-internal
     pair set as a fresh build over corpus ∪ batch — the invariant the
@@ -148,7 +115,7 @@ def test_rollup_chain_second_merge_sees_first(spark, sf_dir):
     corpus+Monday recompute."""
     from legate_dataframe_spark.core.bucketing import (
         read_bucketed,
-        replace_bucketed,
+        swap_versioned,
     )
     from legate_dataframe_spark.pipeline.rollup import (
         GROUP_KEYS,
@@ -165,8 +132,8 @@ def test_rollup_chain_second_merge_sees_first(spark, sf_dir):
     with temp_db(spark, "ldf_t7_chain") as db:
         build_rollup_index(spark, corpus, f"{db}.state")
         gen2 = incremental_rollup_update(spark, f"{db}.state", monday)
-        replace_bucketed(spark, gen2, f"{db}.state", GROUP_KEYS,
-                         num_buckets=16)
+        swap_versioned(spark, gen2, f"{db}.state", GROUP_KEYS,
+                       num_buckets=16)
         got = sorted(map(tuple, read_bucketed(
             spark, f"{db}.state").collect()))
         want = sorted(map(tuple, event_partials(

@@ -287,8 +287,8 @@ def test_view_swap_never_exposes_a_gap(spark):
     """The atomic-swap property: a reader of the stable view succeeds
     at EVERY step of the swap — after the new generation is written,
     after the repoint, and after the old generation is dropped —
-    and sees a consistent (old xor new) generation.  The plain
-    replace_bucketed drop+rename, by contrast, has a window where
+    and sees a consistent (old xor new) generation.  A plain
+    drop+rename swap, by contrast, has a window where
     the name resolves to nothing."""
     from legate_dataframe_spark.core.bucketing import (
         _current_generation,
